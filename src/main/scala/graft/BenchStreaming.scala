@@ -430,8 +430,7 @@ object BenchStreaming {
       // and untimed; ids mix replicas across batches so cross-batch
       // probes stay representative.
       val bulkDir = s"$tmp/neardup_bulk_corpus"
-      val bulkReps = sys.env.getOrElse("SPARK_GRAFT_BULK_REPS", "16").toInt
-      docs.crossJoin(spark.range(bulkReps.toLong).select($"id".as("rep")))
+      docs.crossJoin(spark.range(16L).select($"id".as("rep")))
         .select(($"rep" * 100000L + $"doc_id").as("doc_id"),
           concat_ws(" ", transform(split(trim($"text"), "\\s+"),
             (w, i) => when(i % 3 === 0,
@@ -441,18 +440,6 @@ object BenchStreaming {
         .write.mode("overwrite").parquet(bulkDir)
       val bulk = spark.read.parquet(bulkDir)
       val nBulk = bulk.count()
-      // GRAFT_ND_DEBUG: per-Spark-job wall times for the bulk loop
-      if (sys.env.contains("GRAFT_ND_DEBUG"))
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          private val st = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            st.put(js.jobId, System.nanoTime()): Unit
-          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s = st.remove(je.jobId)
-            if (s != null && (System.nanoTime() - s) > 2e8)
-              System.err.println(f"[ndjob] job ${je.jobId}: ${(System.nanoTime() - s) / 1e9}%.2f s")
-          }
-        })
       val bulkRuns = (1 to 2).map(i => ingest(bulk, s"$tmp/neardup_bulk_state_$i"))
       val bulkPairs = (1 to 2).map(i =>
         spark.read.parquet(s"$tmp/neardup_bulk_state_$i/pairs").count())

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Profiling aid for the incremental near-dup sink's SMALL-batch regime
   * (VERDICT r12 item 7): drives the sf0.1 documents corpus through the
-  * sink in 1.25k-doc batches with GRAFT_ND_DEBUG-style stage marks and
-  * prints per-batch walls plus the Spark-UI-free stage census (number of
-  * jobs/stages per batch via a SparkListener) — the data for deciding
-  * which fixed cost to attack. Not part of any gate. */
+  * sink in 1.25k-doc batches and prints per-batch walls plus the
+  * Spark-UI-free stage census (number of jobs/stages per batch via a
+  * SparkListener) — the data for deciding which fixed cost to attack.
+  * Not part of any gate. */
 object ProfileNearDup {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -277,10 +277,7 @@ object Dedup {
   def prefixJaccardPairs(df: DataFrame, id: String, text: String, n: Int,
                          threshold: Double): DataFrame = {
     val sh = shingles(df, id, text, n).select(col(id).as("doc"), col("shingle"))
-    val order = sh.groupBy(col("shingle")).agg(count(lit(1)).as("tf"))
-      .orderBy(col("tf"), col("shingle"))
-      .select(col("shingle"), monotonically_increasing_id().as("rk"))
-    val docs = sh.join(order, "shingle")
+    val docs = sh.join(rarestFirstRanks(sh), "shingle")
       .groupBy(col("doc"))
       .agg(sort_array(collect_list(col("rk"))).as("rks"))
       .withColumn("sz", size(col("rks")))
@@ -314,6 +311,19 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
+  /** The rarest-first global shingle order of [[prefixJaccardPairs]] and
+    * [[prefixContainmentPairs]]: one (shingle, rk) row per distinct
+    * shingle of `sh` (doc, shingle), with rk strictly increasing in
+    * (tf, shingle) order. rk comes from `monotonically_increasing_id()`
+    * over the range-sorted frame (see [[prefixJaccardPairs]]), which
+    * relies on the sort surviving the optimizer and on the id being
+    * order-isomorphic to it — neither an API guarantee, so DedupSpec pins
+    * the invariant on a multi-partition fixture. */
+  private[graft] def rarestFirstRanks(sh: DataFrame): DataFrame =
+    sh.groupBy(col("shingle")).agg(count(lit(1)).as("tf"))
+      .orderBy(col("tf"), col("shingle"))
+      .select(col("shingle"), monotonically_increasing_id().as("rk"))
+
   /** DIRECTED CONTAINMENT pairs — `|A ∩ B| / |A| ≥ t` over n-gram shingle
     * sets: "document A is (nearly) contained in document B". The signal
     * Jaccard structurally misses: a paragraph quoted verbatim inside a
@@ -337,17 +347,14 @@ object Dedup {
     * one too SHORT (provably complete: floor_double(t·sz) ≤ ⌈t·sz⌉_real =
     * the minimal qualifying intersection, since t·sz_double ≤ m_min + ulp).
     *
-    * Same distributed rarest-first rank construction as
+    * Same rarest-first rank ([[rarestFirstRanks]]) as
     * [[prefixJaccardPairs]]; candidates verify on the full rank arrays. */
   def prefixContainmentPairs(df: DataFrame, id: String, text: String, n: Int,
                              threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold must be in (0, 1], got $threshold")
     val sh = shingles(df, id, text, n).select(col(id).as("doc"), col("shingle"))
-    val order = sh.groupBy(col("shingle")).agg(count(lit(1)).as("tf"))
-      .orderBy(col("tf"), col("shingle"))
-      .select(col("shingle"), monotonically_increasing_id().as("rk"))
-    val docs = sh.join(order, "shingle")
+    val docs = sh.join(rarestFirstRanks(sh), "shingle")
       .groupBy(col("doc"))
       .agg(sort_array(collect_list(col("rk"))).as("rks"))
       .withColumn("sz", size(col("rks")))

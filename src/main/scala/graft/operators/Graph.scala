@@ -255,9 +255,10 @@ object Graph {
     * known for on bipartite-ish regions.
     *
     * Each round: one edge⋈labels join (vertex-keyed shuffle), one
-    * (node, label) count aggregation, one per-node window for the argmax
-    * — all distributed, label state one row per node, checkpointed per
-    * round so plan size stays O(1) per round (the bfsHops discipline).
+    * (node, label) count aggregation, one per-node `min(struct(−c, label))`
+    * hash aggregate for the argmax — all distributed, label state one row
+    * per node, checkpointed per round so plan size stays O(1) per round
+    * (the bfsHops discipline).
     * Output: (node, label) for every node on ≥ 1 edge. */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")

@@ -296,46 +296,21 @@ object Scale {
     * sink writing N files per trigger turns a table into millions of
     * KB-files whose open/footer cost dominates every scan). Rewrites the
     * dir to ⌈bytes/targetBytes⌉ files and publishes by the same crash-safe
-    * rename-aside swap as the streaming sinks: readers never see a
-    * half-compacted table, and a crash at any point leaves either the old
-    * or the new layout, never neither. Returns the output file count. */
+    * [[graft.streaming.StateDir]] protocol as the streaming sinks (no
+    * marker): readers never see a half-compacted table, and a crash at any
+    * point leaves either the old or the new layout, never neither — the
+    * next call repairs it first. Returns the output file count. */
   def compactDir(spark: SparkSession, path: String,
                  targetBytes: Long = 128L * 1024 * 1024): Int = {
+    val state = graft.streaming.StateDir.recovered(spark, path, "compactDir",
+      requireMarker = false)
     val p = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    val next = new org.apache.hadoop.fs.Path(path + "_next")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash repair BEFORE doing anything (the same recoverSwap protocol as
-    // the streaming sinks — without it the "either old or new layout"
-    // claim is false in the window between the two renames):
-    //  - table missing + _next present ⇒ crash mid-swap; _next is a
-    //    complete compacted copy — publish it;
-    //  - table present + _next present ⇒ crash before the swap started —
-    //    drop the stale copy; leftover _old is debris either way (and
-    //    must not survive into our rename(p, old), which would nest).
-    if (fs.exists(next)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(next, p))
-          throw new java.io.IOException(s"compactDir: recovery failed to publish $next")
-      } else fs.delete(next, true): Unit
-    } else if (!fs.exists(p) && fs.exists(old)) {
-      // crash between move-aside and the _next write finishing its rename
-      // chain cannot occur (write happens before any rename), but a crash
-      // immediately after delete(next-recovery branch above) can leave a
-      // lone _old: restore it rather than lose the table
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"compactDir: recovery failed to restore $old")
-    }
-    fs.delete(old, true): Unit
-    val bytes = fs.getContentSummary(p).getLength
+    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
     val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     spark.read.parquet(path).repartition(parts)
-      .write.mode("overwrite").parquet(path + "_next")
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compactDir: failed to move $p aside")
-    if (!fs.rename(next, p))
-      throw new java.io.IOException(s"compactDir: failed to publish $next")
-    fs.delete(old, true): Unit
+      .write.mode("overwrite").parquet(state.next)
+    state.publish()
     parts
   }
 

@@ -340,14 +340,6 @@ object Streaming {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try act finally spark.conf.set("spark.sql.adaptive.enabled", was)
       }
-    // GRAFT_ND_DEBUG=1: per-stage wall times on stderr (profiling aid only)
-    val dbg = sys.env.contains("GRAFT_ND_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(stage: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[nd b$batchId] $stage: ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
     val obs = ndListener(spark)
     val (sigsDir, pairsDir) = (s"$stateDir/sigs", s"$stateDir/pairs")
     val stagingRoot = s"$stateDir/.staging"
@@ -439,10 +431,8 @@ object Streaming {
           .observe(obsNew, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(staged)
       }
-      mark("stage-write")
       val nNew = obs.await(obsNew, 10000).map(_.getLong(0))
         .getOrElse(spark.read.parquet(staged).count())
-      mark("nNew-await")
       if (nNew == 0L) {
         fs.delete(new org.apache.hadoop.fs.Path(staged), true): Unit
         nearDupTallies.put(stateDir,
@@ -619,7 +609,6 @@ object Streaming {
       // crash window: pairs first — a retry regenerates the same pairs
       // and the anti-join drops them; the sigs commit below is what stops
       // the docs looking new
-      mark("plan-build")
       // small profile: the surviving pairs are a handful of rows — an
       // explicit single-partition exchange AFTER the (parallel) verify
       // keeps one write task and one file per batch (replays then
@@ -629,7 +618,6 @@ object Streaming {
         (if (small) freshPairs.repartition(1) else freshPairs)
           .write.mode("append").parquet(pairsDir)
       }
-      mark("pairs-write")
       val cumCand = st.cumCand +
         obs.await(obsCand, 10000).map(_.getLong(0))
           .getOrElse(cand.distinct().count())
@@ -650,7 +638,6 @@ object Streaming {
           fs.rename(f.getPath, new org.apache.hadoop.fs.Path(s"$sigsDir/$nm")): Unit
       }
       fs.delete(new org.apache.hadoop.fs.Path(staged), true): Unit
-      mark("commit")
       nearDupTallies.put(stateDir,
         NearDupTally(nDocs, cumCand, math.max(batchId, st.lastBatchId), nNew))
     } catch { case e: Throwable => nearDupTallies.remove(stateDir); throw e }
@@ -740,11 +727,13 @@ object Streaming {
   /** S7 — last-write-wins upsert sink (consumer1.py:144-150): newest version
     * per key replaces state. `versionCol` orders writes (batch id, event ts,
     * …); rewrite of the key partition is modeled as read-union-dedup-write,
-    * which is the foreachBatch MERGE shape for any keyed table format. */
+    * which is the foreachBatch MERGE shape for any keyed table format.
+    * Published through [[StateDir]] without a marker (a replay re-merges
+    * the same rows to the same result). */
   def upsertLastWinsSink(keyCol: String, versionCol: String, stateDir: String)
                         (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "upsertLastWinsSink")
+    val state = StateDir.recovered(spark, stateDir, "upsertLastWinsSink", requireMarker = false)
     // ties on version prefer the incoming row (the later write wins);
     // only "no state yet" skips the merge — a union/schema failure must
     // propagate, else the overwrite below would silently drop all state
@@ -756,67 +745,8 @@ object Streaming {
     graft.operators.Ops
       .dedupFirstWins(merged, Seq(keyCol), Seq(col(versionCol).desc, col("__p").desc))
       .drop("__p")
-      .write.mode("overwrite").parquet(stateDir + "_next")
-    // Swap stand-in for a transactional table commit, through the SAME
-    // filesystem the state paths resolve to (file://, hdfs://, s3a:// —
-    // a java.io.File rename never resolves URI-qualified paths and its
-    // failure would silently strand every merge in `_next`). RENAME-ASIDE,
-    // not delete-then-rename: cur → _old, next → cur, drop _old — so at
-    // every instant the merged state exists under SOME name and a crash at
-    // any point is repaired by [[recoverSwap]] on the next invocation.
-    // Both renames assert their result: a swallowed failure here means
-    // silent data loss.
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"upsertLastWinsSink: failed to move $cur aside for swap")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"upsertLastWinsSink: failed to rename $next -> $cur")
-    fs.delete(old, true): Unit // leftover debris is cleaned by recoverSwap
-  }
-
-  /** Crash repair for [[upsertLastWinsSink]]'s swap, run before every merge:
-    *  - `_next` with NO live state dir ⇒ the crash hit between the
-    *    move-aside and the publish rename; `_next` holds the fully merged
-    *    state (it is a superset of `_old`), so publish it.
-    *  - `_next` WITH a live state dir ⇒ the crash hit after the merge write
-    *    but before the swap began; the streaming checkpoint never committed
-    *    that batch, so it replays — drop the stale `_next`.
-    *  - a surviving `_old` after the state dir is live is swap debris —
-    *    drop it.
-    *
-    * Marker-carrying sinks (rollup/trending/skyline/ewma/hll/psi — any
-    * sink whose `_applied` batch-id marker rides INSIDE the state dir)
-    * pass `requireMarker = true`: the marker is the LAST thing written
-    * into `_next` before the swap, so its presence proves every table in
-    * the dir committed. Without the check, a crash mid-write on the FIRST
-    * batch (no live state dir to trigger the drop path) would publish a
-    * half-written `_next` — for psiDriftSink that is a ref/ without its
-    * ledger/ (permanent crash-loop on every later read), and for the
-    * single-table sinks a marker-less state that the replayed batch then
-    * merges into AGAIN (silent double-fold for non-idempotent EWMA/ledger
-    * state). An incomplete `_next` is deleted; the streaming checkpoint
-    * never committed that batch, so it replays from scratch.
-    */
-  private def recoverSwap(spark: SparkSession, stateDir: String,
-                          caller: String = "recoverSwap",
-                          requireMarker: Boolean = false): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(next)) {
-      val complete = !requireMarker ||
-        fs.exists(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"))
-      if (!fs.exists(cur) && complete) {
-        if (!fs.rename(next, cur))
-          throw new java.io.IOException(
-            s"$caller: recovery failed to publish $next -> $cur")
-      } else fs.delete(next, true): Unit
-    }
-    if (fs.exists(cur)) fs.delete(old, true): Unit
+      .write.mode("overwrite").parquet(state.next)
+    state.publish() // swap stand-in for a transactional table commit
   }
 
   /** A2 ⊕ S7 — incremental MATERIALIZED-VIEW maintenance: each micro-batch
@@ -824,33 +754,19 @@ object Streaming {
     * the algebraic merge (`Ops`-style sum/max combine — exactly the A2
     * partial≡direct property, so state after N batches provably equals the
     * direct aggregate of all N batches' rows), and swapped in through the
-    * same crash-safe rename-aside publish as [[upsertLastWinsSink]]. This
-    * is the lambda architecture's serving table WITHOUT the batch-layer
-    * recompute: at 100 TB you maintain the rollup with per-batch work
-    * proportional to the batch, not the history.
+    * crash-safe [[StateDir]] publish. This is the lambda architecture's
+    * serving table WITHOUT the batch-layer recompute: at 100 TB you
+    * maintain the rollup with per-batch work proportional to the batch,
+    * not the history.
     *
-    * NOT idempotent under replay by itself (counts would double), so the
-    * last applied batchId rides INSIDE the state dir (an `_applied` file,
-    * invisible to parquet reads) and is therefore published by the same
-    * atomic rename as the data — a replayed batchId is skipped, and no
-    * crash point can separate the data from its marker. */
+    * NOT idempotent under replay by itself (counts would double), so it
+    * carries the [[StateDir]] batch-id marker: a replayed batchId is
+    * skipped. */
   def incrementalRollupSink(keyCol: String, sums: Seq[String], maxes: Seq[String],
                             stateDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "incrementalRollupSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: already merged
+    val state = StateDir.recovered(spark, stateDir, "incrementalRollupSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: already merged
     val aggs = sums.map(c => sum(col(c)).as(c)) ++ maxes.map(c => max(col(c)).as(c))
     val partial = batch.groupBy(col(keyCol))
       .agg(aggs.head, aggs.tail: _*)
@@ -860,17 +776,8 @@ object Streaming {
           partial.unionByName(spark.read.parquet(stateDir)),
           Seq(keyCol), sums, maxes)
       else partial
-    merged.write.mode("overwrite").parquet(stateDir + "_next")
-    val out = fs.create(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"incrementalRollupSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"incrementalRollupSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    merged.write.mode("overwrite").parquet(state.next)
+    state.publish(batchId)
   }
 
   /** S7 ⊕ [[graft.operators.Dedup.goldenRecord]] — streaming GOLDEN-RECORD
@@ -896,28 +803,13 @@ object Streaming {
     * the upsert sink's convention).
     *
     * `n_records` is a count, so the sink is NOT idempotent under replay
-    * by itself: the last applied batchId rides INSIDE the state dir (the
-    * [[incrementalRollupSink]] `_applied` marker discipline verbatim,
-    * published by the same atomic rename as the data) — a replayed
-    * batchId is skipped. Crash repair via [[recoverSwap]] with
-    * `requireMarker = true`. */
+    * by itself: it carries the [[StateDir]] batch-id marker, and a
+    * replayed batchId is skipped. */
   def goldenRecordSink(keyCol: String, versionCol: String, fields: Seq[String],
                        stateDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "goldenRecordSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: already folded
+    val state = StateDir.recovered(spark, stateDir, "goldenRecordSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: already folded
     // per-field provenance for fresh rows: the row's own version where
     // the field is non-null (state rows arrive with provenance already
     // attached, possibly OLDER than their key's max version)
@@ -944,17 +836,8 @@ object Streaming {
           Seq(max_by(col(f), key).as(f), max(col(s"__v_$f")).as(s"__v_$f"))
         }) :+ sum(col("n_records")).as("n_records")
     merged.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(stateDir + "_next")
-    val out = fs.create(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"goldenRecordSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"goldenRecordSink: failed to publish $next")
-    fs.delete(old, true): Unit
+      .write.mode("overwrite").parquet(state.next)
+    state.publish(batchId)
   }
 
   /** STREAMING φ-FREQUENT ITEMS (trending) — an incremental MISRA–GRIES
@@ -969,35 +852,19 @@ object Streaming {
     * State is ≤ k rows REGARDLESS of stream length or vocabulary — this
     * never stores a per-item table.
     *
-    * Crash/replay discipline is [[incrementalRollupSink]]'s verbatim:
-    * the applied batchId AND the running total ride an `_applied` marker
-    * INSIDE the state dir, published by the same rename-aside atomic
-    * swap, so a replayed batch is skipped and no crash point separates
-    * the summary from its marker. Per batch: one batch-grain count, one
-    * checkpointed merge, one k+1-row driver pull — bounded work, bounded
-    * state. Readers compare `est · (k+1) > n_total` (the marker's n) for
+    * Crash/replay discipline is [[StateDir]]'s, with the running total as
+    * the marker's second field, so a replayed batch is skipped and no
+    * crash point separates the summary from its total. Per batch: one
+    * batch-grain count, one checkpointed merge, one k+1-row driver pull —
+    * bounded work, bounded state. Readers compare `est · (k+1) > n_total` (the marker's n) for
     * the φ-frequency decision, exactly as the batch operator's
     * verification pass does. */
   def trendingSink(itemCol: String, k: Int, stateDir: String)
                   (batch: DataFrame, batchId: Long): Unit = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "trendingSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): (Long, Long) = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) (-1L, 0L)
-      else {
-        val in = fs.open(m)
-        val parts =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            "UTF-8").trim.split(" ")
-          finally in.close()
-        (parts(0).toLong, parts(1).toLong)
-      }
-    }
-    val (applied, nPrev) = readMarker(stateDir)
+    val state = StateDir.recovered(spark, stateDir, "trendingSink", requireMarker = true)
+    val (applied, nPrev) = trendingFields(state)
     if (batchId <= applied) return // replayed batch: already merged
     val counts = batch
       .select(col(itemCol).cast("string").as("item"))
@@ -1014,34 +881,17 @@ object Streaming {
     val d = if (topK1.length <= k) 0L else topK1.last.getLong(1)
     val pruned = merged.filter(col("est") > d)
       .select(col("item"), (col("est") - d).as("est"))
-    pruned.write.mode("overwrite").parquet(stateDir + "_next")
-    val out = fs.create(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"), true)
-    try out.write(s"$batchId ${nPrev + nBatch}".getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"trendingSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"trendingSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    pruned.write.mode("overwrite").parquet(state.next)
+    state.publish(batchId, nPrev + nBatch)
   }
 
   /** The running total (for the φ threshold) and last applied batch of a
     * [[trendingSink]] state dir: (batchId, n_total). */
-  def trendingMarker(spark: SparkSession, stateDir: String): (Long, Long) = {
-    val m = new org.apache.hadoop.fs.Path(s"$stateDir/_applied")
-    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(m)) (-1L, 0L)
-    else {
-      val in = fs.open(m)
-      val parts =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.split(" ")
-        finally in.close()
-      (parts(0).toLong, parts(1).toLong)
-    }
-  }
+  def trendingMarker(spark: SparkSession, stateDir: String): (Long, Long) =
+    trendingFields(new StateDir(spark, stateDir, "trendingMarker"))
+
+  private def trendingFields(state: StateDir): (Long, Long) =
+    state.marker.fold((-1L, 0L))(m => (m(0), m(1)))
 
   /** STREAMING PARETO FRONTIER — incremental skyline maintenance, the
     * streaming twin of [[graft.operators.Skyline.skyline2d]] (both dims
@@ -1058,27 +908,13 @@ object Streaming {
     * an anti-correlated stream legitimately grows it and the 2D plan
     * stays frontier-linear either way.
     *
-    * Crash/replay discipline is [[incrementalRollupSink]]'s verbatim:
-    * last applied batchId inside an `_applied` marker published by the
-    * same rename-aside atomic swap — a replayed batch is skipped, and no
-    * crash point separates the frontier from its marker. */
+    * Crash/replay discipline is [[StateDir]]'s (batch-id marker): a
+    * replayed batch is skipped. */
   def skylineSink(x: String, y: String, stateDir: String)
                  (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "skylineSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: no-op
+    val state = StateDir.recovered(spark, stateDir, "skylineSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: no-op
     val bSky = graft.operators.Skyline.skyline2d(batch, x, y)
     val merged =
       if (stateExists(spark, stateDir))
@@ -1087,17 +923,8 @@ object Streaming {
           bSky.unionByName(spark.read.parquet(stateDir)), x, y,
           pruneBuckets = 1)
       else bSky
-    merged.write.mode("overwrite").parquet(stateDir + "_next")
-    val out = fs.create(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"skylineSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"skylineSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    merged.write.mode("overwrite").parquet(state.next)
+    state.publish(batchId)
   }
 
   /** STREAMING EWMA — each key's smoothed level ([[graft.operators
@@ -1111,28 +938,15 @@ object Streaming {
     * streaming-EWMA contract: the fold order IS arrival order; within a
     * batch the `seq` columns sort).
     *
-    * Crash/replay discipline is [[incrementalRollupSink]]'s verbatim
-    * (`_applied` marker inside the rename-aside swap). */
+    * Crash/replay discipline is [[StateDir]]'s (batch-id marker). */
   def ewmaSink(group: String, seq: Seq[String], x: String,
                alphaShift: Int, scale: Int, stateDir: String)
               (batch: DataFrame, batchId: Long): Unit = {
     require(alphaShift >= 1 && alphaShift <= 32 && scale >= 0 && scale <= 6,
       s"ewmaSink: bad alphaShift=$alphaShift / scale=$scale")
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "ewmaSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: no-op
+    val state = StateDir.recovered(spark, stateDir, "ewmaSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: no-op
     val unit = math.pow(10, scale).toLong
     val xq = (col(x).cast(s"decimal(18,$scale)") * unit).cast("long")
     val e = struct(seq.map(col) :+ xq.as("__xq"): _*)
@@ -1157,17 +971,8 @@ object Streaming {
         .otherwise( // continuing key: stored level seeds the fold
           aggregate(col("__xs"), col("ewma_fp"), step))
         .as("ewma_fp"))
-    merged.write.mode("overwrite").parquet(stateDir + "_next")
-    val out = fs.create(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"ewmaSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"ewmaSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    merged.write.mode("overwrite").parquet(state.next)
+    state.publish(batchId)
   }
 
   /** STREAMING DISTINCT-COUNT (HLL) — per-group approximate distinct
@@ -1182,31 +987,16 @@ object Streaming {
     * stores a per-item table, which is the entire point at 100 TB
     * ("distinct users per source, ever" costs group-grain state).
     *
-    * Crash/replay discipline is [[incrementalRollupSink]]'s verbatim
-    * (`_applied` marker inside the rename-aside swap): HLL union is NOT
-    * idempotent-safe in general (re-inserting the same ITEMS is a no-op,
-    * but replaying a batch after a partial publish could double-count
-    * nothing — union with itself IS idempotent; the marker still skips
-    * replays so the discipline stays uniform with the non-idempotent
-    * sinks). */
+    * Crash/replay discipline is [[StateDir]]'s (batch-id marker). HLL
+    * union with itself IS idempotent, so a replay could not double-count;
+    * the marker still skips replays so the discipline stays uniform with
+    * the non-idempotent sinks. */
   def hllDistinctSink(group: String, item: String, stateDir: String,
                       lgConfigK: Int = 12)
                      (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "hllDistinctSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: no-op
+    val state = StateDir.recovered(spark, stateDir, "hllDistinctSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: no-op
     val b = batch.filter(col(item).isNotNull)
       .groupBy(col(group))
       .agg(hll_sketch_agg(col(item), lit(lgConfigK)).as("__bs"))
@@ -1220,17 +1010,8 @@ object Streaming {
           .when(col("sketch").isNull, col("__bs"))
           .otherwise(hll_union(col("sketch"), col("__bs"))).as("sketch"))
       .withColumn("n_distinct_est", hll_sketch_estimate(col("sketch")))
-    merged.write.mode("overwrite").parquet(stateDir + "_next")
-    val out = fs.create(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"hllDistinctSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"hllDistinctSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    merged.write.mode("overwrite").parquet(state.next)
+    state.publish(batchId)
   }
 
   /** STREAMING TWO-SIDED CUSUM MONITOR — the sequential change detector
@@ -1247,30 +1028,18 @@ object Streaming {
     * state is ONE row per key. Batches must arrive in observation order
     * (the ewmaSink contract); within a batch the `seq` columns sort.
     *
-    * Crash/replay discipline is [[incrementalRollupSink]]'s verbatim
-    * (`_applied` marker inside the rename-aside swap, marker-checked
-    * recovery). State/output: (group, n_obs, p_pos, min_pos, smax_pos,
-    * p_neg, min_neg, smax_neg, alarm) with alarm = either S_max > h. */
+    * Crash/replay discipline is [[StateDir]]'s (batch-id marker,
+    * marker-checked recovery). State/output: (group, n_obs, p_pos,
+    * min_pos, smax_pos, p_neg, min_neg, smax_neg, alarm) with alarm =
+    * either S_max > h. */
   def cusumSink(group: String, seq: Seq[String], x: String,
                 target: Double, slack: Double, threshold: Double,
                 scale: Int, stateDir: String)
                (batch: DataFrame, batchId: Long): Unit = {
     require(scale >= 0 && scale <= 6, s"cusumSink: scale $scale not in [0, 6]")
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "cusumSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: no-op
+    val state = StateDir.recovered(spark, stateDir, "cusumSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: no-op
     val unit = math.pow(10, scale).toLong
     def fp(v: Double): Long = BigDecimal(v)
       .setScale(scale, BigDecimal.RoundingMode.HALF_UP)
@@ -1325,17 +1094,8 @@ object Streaming {
         col("__dn.s").as("smax_neg"))
       .withColumn("alarm",
         col("smax_pos") > lit(hQ) || col("smax_neg") > lit(hQ))
-    merged.write.mode("overwrite").parquet(stateDir + "_next")
-    val out = fs.create(new org.apache.hadoop.fs.Path(stateDir + "_next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"cusumSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"cusumSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    merged.write.mode("overwrite").parquet(state.next)
+    state.publish(batchId)
   }
 
   /** STREAMING DISTRIBUTION-DRIFT MONITOR (PSI) — the model-ops staple
@@ -1351,35 +1111,22 @@ object Streaming {
     * ledger values downstream. State: the reference bins (value-range
     * bounded) + the ledger (one row per batch) — never raw rows.
     *
-    * Crash/replay discipline is [[incrementalRollupSink]]'s: `_applied`
-    * marker inside the rename-aside swap of the whole state dir (both
-    * frames move together — no crash point separates reference, ledger,
-    * and marker). */
+    * Crash/replay discipline is [[StateDir]]'s: the batch-id marker and
+    * the swap cover the whole state dir (both frames move together — no
+    * crash point separates reference, ledger, and marker). */
   def psiDriftSink(value: String, width: Long, stateDir: String)
                   (batch: DataFrame, batchId: Long): Unit = {
     require(width >= 1, s"psiDriftSink: need width >= 1, got $width")
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "psiDriftSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: no-op
+    val state = StateDir.recovered(spark, stateDir, "psiDriftSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: no-op
     import spark.implicits._
     val bins = batch.filter(col(value).isNotNull)
       .select(expr(s"CAST($value AS BIGINT) div $width").as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("n_b"))
     val nRows = batch.count()
     val nVals = bins.agg(coalesce(sum(col("n_b")), lit(0L))).head().getLong(0)
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
+    val next = state.next
     if (!stateExists(spark, stateDir)) {
       // first applied batch FREEZES the reference — so an empty micro-batch
       // (foreachBatch does deliver them, e.g. at stream start before data
@@ -1405,15 +1152,7 @@ object Streaming {
         .unionByName(Seq((batchId, nRows, psi)).toDF("batch_id", "n_rows", "psi"))
         .write.mode("overwrite").parquet(s"$next/ledger")
     }
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"psiDriftSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"psiDriftSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    state.publish(batchId)
   }
 
   /** STREAMING EMBEDDING-SPACE DRIFT MONITOR — [[psiDriftSink]]'s
@@ -1446,29 +1185,17 @@ object Streaming {
     * batch computation (the mergeTotals shared-semantics rule), so
     * chunked ≡ batch is an identity of code paths, asserted in-spec.
     * State: k·dim centroid rows + k histogram rows + the ledger — never
-    * raw vectors. Crash/replay discipline is [[incrementalRollupSink]]'s
-    * verbatim: `_applied` marker inside the rename-aside swap. */
+    * raw vectors. Crash/replay discipline is [[StateDir]]'s (batch-id
+    * marker over the whole state dir). */
   def embeddingDriftSink(idCol: String, vecCol: String, k: Int, iters: Int,
                          stateDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    recoverSwap(spark, stateDir, "embeddingDriftSink", requireMarker = true)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readMarker(dir: String): Long = {
-      val m = new org.apache.hadoop.fs.Path(s"$dir/_applied")
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId <= readMarker(stateDir)) return // replayed batch: no-op
+    val state = StateDir.recovered(spark, stateDir, "embeddingDriftSink", requireMarker = true)
+    if (batchId <= state.appliedBatch) return // replayed batch: no-op
     import spark.implicits._
     val clean = batch.filter(col(vecCol).isNotNull)
     val nRows = clean.count()
-    val next = new org.apache.hadoop.fs.Path(stateDir + "_next")
+    val next = state.next
     if (!stateExists(spark, stateDir)) {
       // freeze on the first batch that can seed k clusters — an empty or
       // sub-k batch must NOT freeze a degenerate reference (the
@@ -1501,15 +1228,7 @@ object Streaming {
           .toDF("batch_id", "n_rows", "assign_psi", "mean_shift", "max_shift"))
         .write.mode("overwrite").parquet(s"$next/ledger")
     }
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$next/_applied"), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(stateDir)
-    val old = new org.apache.hadoop.fs.Path(stateDir + "_old")
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      throw new java.io.IOException(s"embeddingDriftSink: failed to move $cur aside")
-    if (!fs.rename(next, cur))
-      throw new java.io.IOException(s"embeddingDriftSink: failed to publish $next")
-    fs.delete(old, true): Unit
+    state.publish(batchId)
   }
 
   /** The frozen-centroid matrix back from its row form (k·dim rows —

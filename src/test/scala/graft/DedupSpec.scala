@@ -69,6 +69,24 @@ class DedupSpec extends AnyFunSuite {
     assert(exhaustive.nonEmpty) // the planted pairs must actually be found
   }
 
+  test("rarestFirstRanks: rk strictly increasing in (tf, shingle) order across partitions") {
+    // 600 shingles, shingle i in (i % 6) + 1 docs, over 8 input partitions
+    val sh = (0 until 600).flatMap(i => (0 to i % 6).map(d => (d.toLong, f"s$i%04d")))
+      .toDF("doc", "shingle").repartition(8)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false") // keep the range sort on several partitions
+    try {
+      val rk = Dedup.rarestFirstRanks(sh).as[(String, Long)].collect().toMap
+      val order = (0 until 600).map(i => (i % 6 + 1, f"s$i%04d")).sorted.map(_._2)
+      assert(rk.size == 600)
+      val ranks = order.map(rk)
+      assert(ranks.zip(ranks.tail).forall { case (a, b) => a < b })
+      // the ids really come from more than one partition (partition << 33)
+      assert(rk.values.map(_ >> 33).toSet.size > 1)
+    } finally spark.conf.set(key, was)
+  }
+
   test("prefixContainmentPairs: directed, catches subset-copies Jaccard misses") {
     // doc 20 is doc 10's text VERBATIM inside a much longer document:
     // containment(20 -> 21) = 1.0 while jaccard is far below threshold

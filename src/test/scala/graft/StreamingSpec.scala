@@ -685,6 +685,63 @@ class StreamingSpec extends AnyFunSuite {
     assert(st == (("g", 2L, 12L))) // seed 8, then 8+((16−8)>>1) — no torn-state merge
   }
 
+  test("hll / cusum / embedding-drift sinks: both crash windows repair to the uninterrupted state") {
+    val base = java.nio.file.Files.createTempDirectory("graft_marker_crash").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val fs = p(base).getFileSystem(conf)
+    def copy(from: String, to: String): Unit =
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, p(from), fs, p(to), false, conf))
+    def same(a: String, b: String): Boolean = {
+      val (x, y) = (spark.read.parquet(a), spark.read.parquet(b))
+      x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+    }
+    val rnd = new scala.util.Random(3)
+    val hll = (1 to 600).map(i => (s"g${i % 3}", s"u${rnd.nextInt(150)}")).toDF("g", "u")
+    val cusum = ((1 to 4).map(i => (1L, i.toLong, 0.0)) ++
+      (5 to 8).map(i => (1L, i.toLong, 10.0))).toDF("g", "i", "x")
+    def emb(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
+    // (sink over a state dir, its three batches, the tables of its state)
+    val cases: Seq[(String => (org.apache.spark.sql.DataFrame, Long) => Unit,
+      Seq[org.apache.spark.sql.DataFrame], Seq[String])] = Seq(
+      (d => Streaming.hllDistinctSink("g", "u", d) _,
+        Seq(hll.limit(200), hll.offset(200).limit(200), hll.offset(400)), Seq("")),
+      (d => Streaming.cusumSink("g", Seq("i"), "x", 5.0, 1.0, 10.0, 0, d) _,
+        Seq(cusum.filter($"i" <= 3), cusum.filter($"i".between(4, 6)),
+          cusum.filter($"i" > 6)), Seq("")),
+      (d => Streaming.embeddingDriftSink("vec_id", "embedding", 2, 2, d) _,
+        Seq(emb((0L, Seq(1.0, 0.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0, 0.0)),
+            (2L, Seq(1.0, 0.0, 0.0, 0.0)), (3L, Seq(0.0, 1.0, 0.0, 0.0))),
+          emb((10L, Seq(1.0, 0.0, 0.4, 0.0))),
+          emb((11L, Seq(0.0, 1.0, 0.0, 0.0)), (12L, Seq(0.0, 1.0, 0.0, 0.0)))),
+        Seq("/centroids", "/hist", "/ledger")))
+    for (((sinkAt, bs, tables), c) <- cases.zipWithIndex) {
+      val Seq(ref, merged, crashA, crashB) =
+        Seq("ref", "merged", "a", "b").map(w => s"$base/$c/$w")
+      def run(dir: String, ids: Int*): Unit = ids.foreach(i => sinkAt(dir)(bs(i), i.toLong))
+      run(ref, 0, 1, 2)
+      // window A: batch 1's merged state (with its marker) lives only in
+      // _next and the live dir was moved aside; recovery publishes _next,
+      // and the replay of batch 1 is skipped
+      run(merged, 0, 1)
+      run(crashA, 0)
+      copy(merged, crashA + "_next")
+      assert(fs.rename(p(crashA), p(crashA + "_old")))
+      run(crashA, 1, 2)
+      // window B: a stale _next (marked batch 2, holding batch 1's state)
+      // beside the live dir is dropped, and batch 2 is applied
+      run(crashB, 0, 1)
+      copy(crashB, crashB + "_next")
+      val out = fs.create(p(crashB + "_next/_applied"), true)
+      out.write("2".getBytes("UTF-8")); out.close()
+      run(crashB, 2)
+      for (dir <- Seq(crashA, crashB)) {
+        assert(!fs.exists(p(dir + "_next")) && !fs.exists(p(dir + "_old")), dir)
+        tables.foreach(t => assert(same(dir + t, ref + t), s"$dir$t differs from $ref$t"))
+      }
+    }
+  }
+
   test("incremental rollup sink: state == direct aggregate; replays are no-ops") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rollup").toString + "/state"
     val b0 = Seq((1L, 2.0, 5L), (1L, 3.0, 7L), (2L, 1.0, 2L)).toDF("k", "v", "m")
