@@ -27,6 +27,22 @@ object Bench {
   val noiseClass: Seq[String] =
     Seq("q_pagerank", "q_negative_sample", "q_audio_decode")
 
+  /** The measurement session of Bench, ScaleProbe and Profile: `local[cpus]`
+    * with one shuffle partition per core, AQE on, UTC, no UI, the graft
+    * kernels registered. */
+  private[graft] def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -44,15 +60,7 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     // Warmup pass at the BENCH sf (untimed): AQE picks different physical
     // plans at different scales (broadcast joins at tiny sf become shuffle
     // joins at the bench sf), so warming on sf0.001 alone leaves the bench

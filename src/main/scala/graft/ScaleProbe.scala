@@ -45,20 +45,6 @@ object ScaleProbe {
   private val Off = 10000000L
   private val Dim = 64
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Overridable so specs exercising synth() don't append smoke lines to
     * the canonical measurement file. */
   private def resultsPath: String =
@@ -758,7 +744,7 @@ object ScaleProbe {
     val baseDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val probeDir = args.lift(2).getOrElse("target/probe/sf1")
     val replicas = args.lift(3).map(_.toInt).getOrElse(10)
-    val spark = session()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val marker = new java.io.File(s"$probeDir/part.parquet/_SUCCESS")
     stage match {
       case "synth" => synth(spark, baseDir, probeDir, replicas)

@@ -266,10 +266,10 @@ object Dedup {
     * matching events survives, and its FIRST event always does for a
     * true pair, so the filter is lossless (spec + shared oracle).
     * Both comparisons carry a 1e-9 keep-side epsilon: an FP tie must
-    * keep the candidate, never drop it. Measured (graft.ProbePpjoin): on
-    * the bench corpus the rarest-first prefix alone is already exact
-    * (256 candidates = 256 true pairs — the filters cost nothing and cut
-    * nothing); on the adversarial overlapping-window corpus, where every
+    * keep the candidate, never drop it. Measured (round-14 one-off probe,
+    * since removed): on the bench corpus the rarest-first prefix alone is
+    * already exact (256 candidates = 256 true pairs — the filters cost
+    * nothing and cut nothing); on the adversarial overlapping-window corpus, where every
     * shingle is mid-frequency and the prefix floods, candidates drop
     * 802 321 → 557 250 (length) → 446 139 (positional) against 255 563
     * true pairs — 44% of the verification work removed exactly in the

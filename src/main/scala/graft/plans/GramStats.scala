@@ -17,10 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `gram_stats(text, n)` → `struct<max_c, tot, dup>` (all BIGINT, never
   * null):
-  *  - tokens: `split(trim(text), "\s+")` semantics EXACTLY — trim strips
-  *    0x20 SPACE only; Java split keeps a LEADING empty token when the
-  *    trimmed text starts with non-space whitespace, drops trailing
-  *    empties, and maps the empty string to a single empty token (the
+  *  - tokens: [[Tokens]], `split(trim(text), "\s+")` semantics exactly,
+  *    empty leading and trailing tokens included (the
   *    [[graft.operators.Corpus]] `wordsOf` tokenizer, mirrored by the
   *    oracle's `string_split_regex`); a NULL text has zero tokens;
   *  - grams: every n-token window joined by one space, as a MULTISET
@@ -75,68 +73,16 @@ case class GramStats(text: Expression, n: Expression) extends Expression {
 
 object GramStats {
 
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
-
-  /** Token (offset, length) list under `split(trim(text), "\s+")` — see
-    * the class scaladoc for the exact empty-token edge semantics. Offsets
-    * index the text's byte array; the leading-empty and empty-string
-    * tokens are (0, 0). Returns (offsets, lengths, count), or null when
-    * the text is null. */
-  private def tokenize(bytes: Array[Byte]): (Array[Int], Array[Int], Int) = {
-    var lo = 0
-    var hi = bytes.length
-    while (lo < hi && bytes(lo) == 0x20) lo += 1
-    while (hi > lo && bytes(hi - 1) == 0x20) hi -= 1
-    var offs = new Array[Int](16)
-    var lens = new Array[Int](16)
-    var nTok = 0
-    def push(off: Int, len: Int): Unit = {
-      if (nTok == offs.length) {
-        offs = java.util.Arrays.copyOf(offs, nTok * 2)
-        lens = java.util.Arrays.copyOf(lens, nTok * 2)
-      }
-      offs(nTok) = off; lens(nTok) = len; nTok += 1
-    }
-    if (lo == hi) push(0, 0) // split("") == [""]
-    else {
-      if (isWs(bytes(lo))) push(0, 0) // Java split keeps the leading empty
-      var i = lo
-      while (i < hi) {
-        if (isWs(bytes(i))) i += 1
-        else {
-          val start = i
-          while (i < hi && !isWs(bytes(i))) i += 1
-          push(start, i - start)
-        }
-      }
-    }
-    (offs, lens, nTok)
-  }
-
   /** See the class scaladoc for the exact semantics contract. */
   def compute(text: UTF8String, n: Int): InternalRow = {
     if (text == null) return new GenericInternalRow(Array[Any](0L, 0L, 0L))
-    val bytes = text.getBytes
-    val (offs, lens, nTok) = tokenize(bytes)
-    if (nTok < n) return new GenericInternalRow(Array[Any](0L, 0L, 0L))
-    val nGrams = nTok - n + 1
+    val toks = new Tokens(text.getBytes, dropEmpty = false)
+    if (toks.count < n) return new GenericInternalRow(Array[Any](0L, 0L, 0L))
+    val nGrams = toks.count - n + 1
     val counts = new java.util.HashMap[UTF8String, Array[Long]](nGrams * 2)
     var w = 0
     while (w < nGrams) {
-      var len = n - 1
-      var j = w
-      while (j < w + n) { len += lens(j); j += 1 }
-      val g = new Array[Byte](len)
-      var pos = 0
-      j = w
-      while (j < w + n) {
-        if (j > w) { g(pos) = 0x20; pos += 1 }
-        System.arraycopy(bytes, offs(j), g, pos, lens(j))
-        pos += lens(j)
-        j += 1
-      }
-      val key = UTF8String.fromBytes(g)
+      val key = toks.gram(w, n)
       val c = counts.get(key)
       if (c == null) counts.put(key, Array(1L)) else c(0) += 1L
       w += 1

@@ -15,10 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `rouge_clip(cand, ref, n)` → `struct<clipped, cand_total, ref_total>`
   * (all BIGINT, never null):
-  *  - tokens: `filter(split(trim(text), "\s+"), t => t <> "")` semantics —
-  *    trim strips 0x20 SPACE only, tokens are maximal non-whitespace runs
-  *    (dropping empties makes leading/trailing runs irrelevant); a NULL
-  *    text has zero tokens;
+  *  - tokens: the non-empty [[Tokens]], i.e.
+  *    `filter(split(trim(text), "\s+"), t => t <> "")`; a NULL text has
+  *    zero tokens;
   *  - grams: every n-token window joined by a single space, as a MULTISET
   *    (every occurrence counts — ROUGE is a multiset metric, unlike the
   *    distinct [[ShingleSet]]); fewer than n tokens → zero grams;
@@ -86,58 +85,14 @@ case class RougeClip(cand: Expression, ref: Expression, n: Expression)
 
 object RougeClip {
 
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
-
   /** The n-gram MULTISET of one text under the rougeN tokenization
-    * (non-empty \s+ tokens of the space-trimmed string), as UTF8Strings.
-    * Returns null for "zero grams" (null text or fewer than n tokens). */
+    * (the non-empty [[Tokens]]), or null for "zero grams" (null text or
+    * fewer than n tokens). */
   private def grams(text: UTF8String, n: Int): Array[UTF8String] = {
     if (text == null) return null
-    val bytes = text.getBytes
-    // trim: SPACE (0x20) only — Spark `trim` semantics, NOT \s
-    var lo = 0
-    var hi = bytes.length
-    while (lo < hi && bytes(lo) == 0x20) lo += 1
-    while (hi > lo && bytes(hi - 1) == 0x20) hi -= 1
-    // tokenize: maximal non-whitespace runs (split("\s+") with the empty
-    // tokens filtered out — the filter makes boundary empties irrelevant)
-    var nTok = 0
-    var offs = new Array[Int](16)
-    var lens = new Array[Int](16)
-    var i = lo
-    while (i < hi) {
-      if (isWs(bytes(i))) i += 1
-      else {
-        val start = i
-        while (i < hi && !isWs(bytes(i))) i += 1
-        if (nTok == offs.length) {
-          offs = java.util.Arrays.copyOf(offs, nTok * 2)
-          lens = java.util.Arrays.copyOf(lens, nTok * 2)
-        }
-        offs(nTok) = start; lens(nTok) = i - start; nTok += 1
-      }
-    }
-    if (nTok < n) return null
-    val out = new Array[UTF8String](nTok - n + 1)
-    var w = 0
-    while (w <= nTok - n) {
-      var len = n - 1 // the joining spaces
-      var j = w
-      while (j < w + n) { len += lens(j); j += 1 }
-      val g = new Array[Byte](len)
-      var pos = 0
-      j = w
-      while (j < w + n) {
-        if (j > w) { g(pos) = 0x20; pos += 1 }
-        System.arraycopy(bytes, offs(j), g, pos, lens(j))
-        pos += lens(j)
-        j += 1
-      }
-      out(w) = UTF8String.fromBytes(g)
-      w += 1
-    }
-    out
+    val toks = new Tokens(text.getBytes, dropEmpty = true)
+    if (toks.count < n) return null
+    Array.tabulate(toks.count - n + 1)(toks.gram(_, n))
   }
 
   /** See the class scaladoc for the exact semantics contract. */

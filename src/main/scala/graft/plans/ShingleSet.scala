@@ -12,19 +12,14 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expression: the distinct word-n-gram shingle set of a
   * document in ONE scan-stage pass.
   *
-  * `shingle_set(text, n)` → `array<string>`: tokenize on ASCII whitespace
-  * runs, emit every n-word window joined by a single space, first
-  * occurrence order, duplicates dropped. Bit-identical output to the
-  * column-expression chain it replaces —
-  * `array_distinct(transform(sequence(...), i => concat_ws(" ",
-  * slice(split(trim(text), "\s+"), i, n))))` — including its edge cases:
-  *  - `trim` strips 0x20 SPACE only (tabs/newlines at the ends survive
-  *    into tokenization, exactly like Spark's `trim`),
-  *  - Java `split("\s+", -1)` semantics: a leading separator run yields a
-  *    leading empty token, a trailing run a trailing empty token, and an
-  *    empty string yields one empty token (`\s` is the ASCII class
-  *    `[ \t\n\x0B\f\r]` — single bytes in UTF-8, so the byte scan is exact
-  *    for any multibyte content),
+  * `shingle_set(text, n)` → `array<string>`: tokenize with [[Tokens]],
+  * emit every n-word window joined by a single space, first occurrence
+  * order, duplicates dropped. Bit-identical output to the column-expression
+  * chain it replaces — `array_distinct(transform(sequence(...), i =>
+  * concat_ws(" ", slice(split(trim(text), "\s+"), i, n))))` — including
+  * its edge cases:
+  *  - the empty tokens of [[Tokens]] (leading and trailing whitespace runs
+  *    other than spaces, the empty string) take part in the windows,
   *  - fewer than n tokens (including the null-text path) → EMPTY array,
   *    never null — `size(null_array) >= n` is null, so the replaced
   *    `when(...).otherwise(array())` fell through to the empty array.
@@ -81,62 +76,15 @@ case class ShingleSet(text: Expression, n: Expression) extends Expression {
 object ShingleSet {
   private val EMPTY = new GenericArrayData(Array.empty[Any])
 
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20 || b == 0x09 || b == 0x0a || b == 0x0b || b == 0x0c || b == 0x0d
-
   /** See the class scaladoc for the exact semantics contract. */
   def compute(text: UTF8String, n: Int): ArrayData = {
     if (text == null) return EMPTY
-    val bytes = text.getBytes
-    // trim: SPACE (0x20) only — Spark's `trim` semantics, NOT \s
-    var lo = 0
-    var hi = bytes.length
-    while (lo < hi && bytes(lo) == 0x20) lo += 1
-    while (hi > lo && bytes(hi - 1) == 0x20) hi -= 1
-    // tokenize: Java split("\s+", -1) — tokens are the (possibly empty)
-    // substrings between maximal whitespace runs, including a leading
-    // empty token when the string starts with a run and a trailing one
-    // when it ends with a run; the empty string is one empty token
-    var nTok = 0
-    var offs = new Array[Int](16)
-    var lens = new Array[Int](16)
-    def addTok(off: Int, len: Int): Unit = {
-      if (nTok == offs.length) {
-        offs = java.util.Arrays.copyOf(offs, nTok * 2)
-        lens = java.util.Arrays.copyOf(lens, nTok * 2)
-      }
-      offs(nTok) = off; lens(nTok) = len; nTok += 1
-    }
-    var i = lo
-    var tokStart = lo
-    while (i < hi) {
-      if (isWs(bytes(i))) {
-        addTok(tokStart, i - tokStart)
-        while (i < hi && isWs(bytes(i))) i += 1
-        tokStart = i
-      } else i += 1
-    }
-    addTok(tokStart, hi - tokStart) // final token ("" after a trailing run)
-    if (nTok < n) return EMPTY
-    // n-word windows joined by a single space, deduped first-occurrence
+    val toks = new Tokens(text.getBytes, dropEmpty = false)
+    if (toks.count < n) return EMPTY
+    // n-word windows, deduped first-occurrence
     val seen = new java.util.LinkedHashSet[UTF8String]()
     var w = 0
-    while (w <= nTok - n) {
-      var len = n - 1 // the joining spaces
-      var j = w
-      while (j < w + n) { len += lens(j); j += 1 }
-      val out = new Array[Byte](len)
-      var pos = 0
-      j = w
-      while (j < w + n) {
-        if (j > w) { out(pos) = 0x20; pos += 1 }
-        System.arraycopy(bytes, offs(j), out, pos, lens(j))
-        pos += lens(j)
-        j += 1
-      }
-      seen.add(UTF8String.fromBytes(out)): Unit
-      w += 1
-    }
+    while (w <= toks.count - n) { seen.add(toks.gram(w, n)): Unit; w += 1 }
     val arr = new Array[Any](seen.size)
     val it = seen.iterator()
     var k = 0

@@ -53,8 +53,8 @@ class CorpusSpec extends AnyFunSuite {
     // r18 moved the bigram/trigram multiset aggregates per-row (GramStats
     // kernel); this parity rebuilds the replaced exploded plan inline and
     // pins the tokenizer contract edges: split(trim(text), "\\s+") keeps a
-    // LEADING empty token after a non-space whitespace head, maps "" to
-    // [""], and repetition counts are multiset-exact
+    // LEADING and a TRAILING empty token after non-space whitespace at
+    // either end, maps "" to [""], and repetition counts are multiset-exact
     val docs = Seq(
       (1L, "a b a b a"),            // overlapping repeats
       (2L, "\tx y x y"),            // leading tab -> leading empty token
@@ -62,7 +62,9 @@ class CorpusSpec extends AnyFunSuite {
       (4L, "   "),                  // spaces only -> trim -> [""]
       (5L, "solo"),                 // 1 token: no grams
       (6L, "p q"),                  // exactly one bigram, no trigram
-      (7L, "héé wörld héé wörld héé") // multibyte repeats
+      (7L, "héé wörld héé wörld héé"), // multibyte repeats
+      (8L, "x y\tx y\t"),           // trailing tab -> trailing empty token
+      (9L, "a b\n")                 // trailing newline -> trailing empty token
     ).toDF("doc_id", "text")
     def wordsOf(c: org.apache.spark.sql.Column) = split(trim(c), "\\s+")
     def gramsOf(w: org.apache.spark.sql.Column, n: Int) =
@@ -85,7 +87,7 @@ class CorpusSpec extends AnyFunSuite {
         .select($"doc_id", $"m.max_c", $"m.tot", $"m.dup")
         .as[(Long, Long, Long, Long)].collect()
         .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-      (1L to 7L).foreach { id =>
+      (1L to 9L).foreach { id =>
         assert(got(id) == expected.getOrElse(id, (0L, 0L, 0L)),
           s"n=$n doc $id: got ${got(id)}, expected ${expected.getOrElse(id, (0L, 0L, 0L))}")
       }
@@ -93,7 +95,7 @@ class CorpusSpec extends AnyFunSuite {
     // and the full operator output shape on the same docs
     val full = Corpus.repetitionStats(docs, "doc_id", "text")
       .orderBy($"doc_id").as[(Long, Long, Double, Double, Double)].collect()
-    assert(full.length == 7)
+    assert(full.length == 9)
     // "a b a b a": bigrams {a b: 2, b a: 2} -> max 2, frac 0.8; trigrams
     // {a b a: 2, b a b: 1} -> dup 2 of 3
     assert(full(0) == ((1L, 5L, 0.4, 0.8, 2.0 / 3)), full(0).toString)
