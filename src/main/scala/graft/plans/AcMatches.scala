@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * deterministic canonical form the oracle mirrors with
   * `string_agg(p, '|' ORDER BY p)`). `patterns` must be a FOLDABLE
   * `array<string>` literal — the blocklist ships once into the plan, the
-  * automaton is built ONCE per executor from it (the [[BpeEncode]]
-  * reference-object pattern), and each row pays a single O(len(text))
+  * automaton is built ONCE per expression instance from it (the
+  * [[Kernel]] prepared object), and each row pays a single O(len(text))
   * walk REGARDLESS OF LEXICON SIZE. The composed alternative — one
   * `contains()` column per pattern — is O(len·patterns) per row and
   * rebuilds the plan every time the list changes; a join against an
@@ -35,54 +31,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * empty patterns are rejected at build (an empty needle matches
   * everything and usually signals a broken blocklist file).
   */
-case class AcMatches(text: Expression, patterns: Expression) extends Expression {
+case class AcMatches(text: Expression, patterns: Expression) extends Kernel[AcMatcher] {
 
-  override def children: Seq[Expression] = Seq(text, patterns)
-
-  override def checkInputDataTypes(): TypeCheckResult = (text.dataType, patterns.dataType) match {
-    case (StringType, ArrayType(StringType, _)) if patterns.foldable =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      "ac_matches: expects (string, foldable array<string>), got " +
-        s"(${text.dataType.simpleString}, ${patterns.dataType.simpleString})")
-  }
-
+  protected def signature = Seq(Kernel.input(StringType), Kernel.literal(ArrayType(StringType)))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "ac_matches"
 
-  // built once per expression instance (per executor after serialization)
-  @transient private lazy val matcher: AcMatcher = {
-    val arr = patterns.eval().asInstanceOf[ArrayData]
-    val pats = Array.tabulate(arr.numElements()) { i =>
+  protected def prepare(params: IndexedSeq[Any]): AcMatcher = {
+    val arr = params(0).asInstanceOf[ArrayData]
+    new AcMatcher(Array.tabulate(arr.numElements()) { i =>
       val p = arr.getUTF8String(i)
       require(p != null, s"ac_matches: pattern $i is null")
       p.toString
-    }
-    new AcMatcher(pats)
+    })
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = text.eval(input)
-    if (v == null) null else matcher.matches(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tGen = text.genCode(ctx)
-    val mRef = ctx.addReferenceObj("acMatcher", matcher, classOf[AcMatcher].getName)
-    ev.copy(code = code"""
-      ${tGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${tGen.isNull}) {
-        ${ev.value} = $mRef.matches(${tGen.value});
-        ${ev.isNull} = false;
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(text = newChildren(0), patterns = newChildren(1))
+  override def compute(text: Any): Any = prepared.matches(text.asInstanceOf[UTF8String])
 }
 
 /** The automaton: goto trie + BFS failure links with output sets merged

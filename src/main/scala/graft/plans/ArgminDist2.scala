@@ -1,12 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: nearest centroid of a quantized vector.
@@ -24,9 +18,10 @@ import org.apache.spark.sql.types._
   * per row per centroid — with k=8, dim=64 that is ~24 interpreted
   * array-lambda evaluations per row across the assignment's three uses, and
   * it made `q_kmeans_assign` the most expensive query in the bench (14.5 s
-  * at sf0.1 — 8× the median). Here the centroid matrix is one cached
-  * reference object and the whole argmin is a tight two-level loop inside
-  * the codegen'd stage (the [[LshBandKeys]] construction).
+  * at sf0.1 — 8× the median). Here the centroid matrix is resolved once
+  * per instance and the whole argmin is a tight two-level loop inside
+  * the codegen'd stage (the [[LshBandKeys]] construction): the
+  * [[Top2Dist2]] loop, of whose result this is the first two fields.
   *
   * Null/ragged semantics: a NULL vector, one whose length differs from
   * the centroid dim, or one containing a NULL element yields NULL —
@@ -35,107 +30,16 @@ import org.apache.spark.sql.types._
   * loudly instead of wrapping into a wrong assignment.
   */
 case class ArgminDist2(vec: Expression, centroids: Expression, k: Expression)
-    extends Expression {
+    extends Kernel[Top2Dist2.Centroids] {
 
-  override def children: Seq[Expression] = Seq(vec, centroids, k)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isLongArray(dt: DataType) = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (!isLongArray(vec.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"argmin_dist2: vec must be array<long>, got ${vec.dataType.simpleString}")
-    else if (!isLongArray(centroids.dataType) || !centroids.foldable)
-      TypeCheckResult.TypeCheckFailure("argmin_dist2: centroids must be a foldable array<long>")
-    else if (k.dataType != IntegerType || !k.foldable)
-      TypeCheckResult.TypeCheckFailure("argmin_dist2: k must be an int literal")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
+  protected def signature = Top2Dist2.signature
+  protected def prepare(params: IndexedSeq[Any]) = new Top2Dist2.Centroids(params)
   override def dataType: DataType = StructType(Seq(
     StructField("cluster", IntegerType, nullable = false),
     StructField("dist2", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "argmin_dist2"
 
-  private lazy val kV: Int = k.eval().asInstanceOf[Int]
-  private lazy val centroidsV: Array[Long] =
-    centroids.eval().asInstanceOf[ArrayData].toLongArray()
-  private lazy val dim: Int = centroidsV.length / kV
-
-  override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
-    if (a.numElements() != dim) return null
-    // null element → null result (the null-propagation semantics of the
-    // zip_with fold this replaced — a null component must not silently
-    // score as 0)
-    var i = 0
-    while (i < dim) { if (a.isNullAt(i)) return null; i += 1 }
-    var best = 0
-    var bestD = Long.MaxValue
-    var c = 0
-    while (c < kV) {
-      var s = 0L
-      i = 0
-      val off = c * dim
-      while (i < dim) {
-        val d = a.getLong(i) - centroidsV(off + i)
-        // exact arithmetic: wrap-around would deterministically pick a
-        // WRONG centroid; overflow must be loud (the ANSI-mode contract
-        // of the fold this replaced)
-        s = Math.addExact(s, Math.multiplyExact(d, d))
-        i += 1
-      }
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    new GenericInternalRow(Array[Any](best, bestD))
+  override def compute(v: Any): Any = {
+    val t = Top2Dist2.nearestTwo(v, prepared)
+    if (t == null) null else new GenericInternalRow(t.take(2))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vecGen = vec.genCode(ctx)
-    val ctRef = ctx.addReferenceObj("argminCentroids", centroidsV, "long[]")
-    val best = ctx.freshName("best")
-    val bestD = ctx.freshName("bestD")
-    val c = ctx.freshName("c")
-    val i = ctx.freshName("i")
-    val s = ctx.freshName("s")
-    val d = ctx.freshName("d")
-    val off = ctx.freshName("off")
-    val anyNull = ctx.freshName("anyNull")
-    ev.copy(code = code"""
-      ${vecGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-      if (!${vecGen.isNull} && ${vecGen.value}.numElements() == $dim) {
-        boolean $anyNull = false;
-        for (int $i = 0; $i < $dim; $i++) {
-          if (${vecGen.value}.isNullAt($i)) { $anyNull = true; break; }
-        }
-        if (!$anyNull) {
-          int $best = 0;
-          long $bestD = Long.MAX_VALUE;
-          for (int $c = 0; $c < $kV; $c++) {
-            long $s = 0L;
-            int $off = $c * $dim;
-            for (int $i = 0; $i < $dim; $i++) {
-              long $d = ${vecGen.value}.getLong($i) - $ctRef[$off + $i];
-              $s = java.lang.Math.addExact($s, java.lang.Math.multiplyExact($d, $d));
-            }
-            if ($s < $bestD) { $bestD = $s; $best = $c; }
-          }
-          ${ev.isNull} = false;
-          ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            new Object[] { $best, $bestD });
-        }
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(vec = newChildren(0), centroids = newChildren(1), k = newChildren(2))
 }

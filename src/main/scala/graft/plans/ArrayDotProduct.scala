@@ -1,11 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: dot product of two `array<double>` columns.
@@ -13,34 +9,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Why not `aggregate(zip_with(...))`: higher-order functions are evaluated
   * interpreted (no whole-stage codegen) and allocate an intermediate array
   * per row — on an O(pairs) similarity join that is the entire runtime. This
-  * expression generates a tight scalar loop inside the codegen'd stage
+  * expression runs a tight scalar loop inside the codegen'd stage
   * (measured ~19× faster on the sf0.1 embedding near-dup query).
   *
   * Accumulation is sequential (`s += a[i]*b[i]`), matching both the
   * higher-order-function fold it replaces and DuckDB's list_dot_product, so
   * results stay bit-identical to the oracle.
   */
-case class ArrayDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class ArrayDotProduct(left: Expression, right: Expression) extends Kernel[Unit] {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"array_dot requires array<double> inputs, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true // null inputs OR ragged pair
-  override def prettyName: String = "array_dot"
+  protected def signature = Seq(Kernel.input(ArrayType(DoubleType)), Kernel.input(ArrayType(DoubleType)))
+  protected def prepare(params: IndexedSeq[Any]): Unit = ()
+  override def dataType: DataType = DoubleType // null inputs OR ragged pair → null
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val y = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  override def compute(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
     // length mismatch → null, never a silently-truncated partial dot (the
     // DuckDB oracle errors on ragged pairs; null keeps the row visible
     // instead of plausible-but-wrong)
@@ -53,96 +37,4 @@ case class ArrayDotProduct(left: Expression, right: Expression)
       s
     }
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDotProduct].getName, "array_dot"),
-      (exprs: Seq[Expression]) => ArrayDotProduct(exprs(0), exprs(1))),
-    (FunctionIdentifier("lsh_band_keys"),
-      new ExpressionInfo(classOf[LshBandKeys].getName, "lsh_band_keys"),
-      (exprs: Seq[Expression]) => LshBandKeys(exprs(0), exprs(1), exprs(2), exprs(3))),
-    (FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs(0), exprs(1))),
-    (FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "shingle_set"),
-      (exprs: Seq[Expression]) => ShingleSet(exprs(0), exprs(1))),
-    (FunctionIdentifier("band_keys"),
-      new ExpressionInfo(classOf[BandKeys].getName, "band_keys"),
-      (exprs: Seq[Expression]) => BandKeys(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      (exprs: Seq[Expression]) => BpeEncode(exprs(0), exprs(1))),
-    (FunctionIdentifier("argmin_dist2"),
-      new ExpressionInfo(classOf[ArgminDist2].getName, "argmin_dist2"),
-      (exprs: Seq[Expression]) => ArgminDist2(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("top2_dist2"),
-      new ExpressionInfo(classOf[Top2Dist2].getName, "top2_dist2"),
-      (exprs: Seq[Expression]) => Top2Dist2(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("hilbert_xy"),
-      new ExpressionInfo(classOf[HilbertXy].getName, "hilbert_xy"),
-      (exprs: Seq[Expression]) => HilbertXy(exprs(0), exprs(1))),
-    (FunctionIdentifier("deflate_ratio"),
-      new ExpressionInfo(classOf[DeflateRatio].getName, "deflate_ratio"),
-      (exprs: Seq[Expression]) => DeflateRatio(exprs(0))),
-    (FunctionIdentifier("int8_quantize"),
-      new ExpressionInfo(classOf[Int8Quantize].getName, "int8_quantize"),
-      (exprs: Seq[Expression]) => Int8Quantize(exprs(0))),
-    (FunctionIdentifier("ac_matches"),
-      new ExpressionInfo(classOf[AcMatches].getName, "ac_matches"),
-      (exprs: Seq[Expression]) => AcMatches(exprs(0), exprs(1))),
-    (FunctionIdentifier("unigram_encode"),
-      new ExpressionInfo(classOf[UnigramEncode].getName, "unigram_encode"),
-      (exprs: Seq[Expression]) => UnigramEncode(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("char_gram_buckets"),
-      new ExpressionInfo(classOf[CharGramBuckets].getName, "char_gram_buckets"),
-      (exprs: Seq[Expression]) => CharGramBuckets(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("rouge_clip"),
-      new ExpressionInfo(classOf[RougeClip].getName, "rouge_clip"),
-      (exprs: Seq[Expression]) => RougeClip(exprs(0), exprs(1), exprs(2))),
-    (FunctionIdentifier("gram_stats"),
-      new ExpressionInfo(classOf[GramStats].getName, "gram_stats"),
-      (exprs: Seq[Expression]) => GramStats(exprs(0), exprs(1))))
-
-  /** Idempotent per-session registration (for library callers that don't
-    * control session construction). */
-  def register(spark: SparkSession): Unit = functions.foreach {
-    case (ident, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(ident))
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-  }
-}
-
-/** `SparkSessionExtensions` hook: sessions built with
-  * `.withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`) get `array_dot` as a
-  * SQL function too. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    GraftFunctions.functions.foreach(e.injectFunction)
 }

@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,57 +28,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted cost was the dominant term of the fused probe job. Here
   * the whole key array is one tight loop over the signature's longs. */
 case class BandKeys(sig: Expression, bands: Expression, rows: Expression)
-    extends Expression {
+    extends Kernel[(Int, Int)] {
 
-  override def children: Seq[Expression] = Seq(sig, bands, rows)
-
-  override def checkInputDataTypes(): TypeCheckResult = sig.dataType match {
-    case ArrayType(LongType, _)
-      if bands.dataType == IntegerType && bands.foldable &&
-         rows.dataType == IntegerType && rows.foldable =>
-      val (b, r) = (bands.eval().asInstanceOf[Int], rows.eval().asInstanceOf[Int])
-      if (b > 0 && r > 0) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure("band_keys: bands and rows must be > 0")
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"band_keys: expects (array<long>, int literal, int literal), got " +
-        s"(${sig.dataType.simpleString}, ${bands.dataType.simpleString}, " +
-        s"${rows.dataType.simpleString})")
-  }
-
+  protected def signature =
+    Seq(Kernel.input(ArrayType(LongType)), Kernel.literal(IntegerType), Kernel.literal(IntegerType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "band_keys"
 
-  private lazy val bandsV: Int = bands.eval().asInstanceOf[Int]
-  private lazy val rowsV: Int = rows.eval().asInstanceOf[Int]
+  protected def prepare(params: IndexedSeq[Any]): (Int, Int) =
+    (Kernel.positive("band_keys: bands", params(0)), Kernel.positive("band_keys: rows", params(1)))
 
-  override def eval(input: InternalRow): Any = {
-    val v = sig.eval(input)
-    if (v == null) null
-    else BandKeys.compute(v.asInstanceOf[ArrayData], bandsV, rowsV)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sGen = sig.genCode(ctx)
-    // shared static helper keeps codegen and interpreted paths identical
-    ev.copy(code = code"""
-      ${sGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${sGen.isNull}) {
-        ${ev.value} = graft.plans.BandKeys.compute(${sGen.value}, $bandsV, $rowsV);
-        ${ev.isNull} = false;
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(sig = newChildren(0), bands = newChildren(1), rows = newChildren(2))
-}
-
-object BandKeys {
-  /** See the class scaladoc for the exact semantics contract. */
-  def compute(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
+  override def compute(v: Any): Any = {
+    val sig = v.asInstanceOf[ArrayData]
+    val (bands, rows) = prepared
     val len = sig.numElements()
     val out = new Array[Any](bands)
     val sb = new java.lang.StringBuilder(24 * rows)

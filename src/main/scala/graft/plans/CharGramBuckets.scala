@@ -1,10 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,59 +31,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * build dropped from ~2 s of its 4.3 s to scan speed at sf0.1).
   */
 case class CharGramBuckets(text: Expression, n: Expression, buckets: Expression)
-    extends Expression {
+    extends Kernel[GramHasher] {
 
-  override def children: Seq[Expression] = Seq(text, n, buckets)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (text.dataType, n.dataType, buckets.dataType) match {
-      case (StringType, IntegerType, IntegerType) if n.foldable && buckets.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "char_gram_buckets: expects (string, foldable int, foldable int), got " +
-          s"(${text.dataType.simpleString}, ${n.dataType.simpleString}, " +
-          s"${buckets.dataType.simpleString})")
-    }
-
+  protected def signature =
+    Seq(Kernel.input(StringType), Kernel.literal(IntegerType), Kernel.literal(IntegerType))
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("b", LongType, nullable = false),
       StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "char_gram_buckets"
 
-  @transient private lazy val hasher: GramHasher = {
-    val nv = n.eval().asInstanceOf[Int]
-    val bv = buckets.eval().asInstanceOf[Int]
+  protected def prepare(params: IndexedSeq[Any]): GramHasher = {
+    val nv = params(0).asInstanceOf[Int]
+    val bv = params(1).asInstanceOf[Int]
     require(nv >= 1 && bv >= 1, s"char_gram_buckets: need n/buckets >= 1, got $nv/$bv")
     new GramHasher(nv, bv)
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = text.eval(input)
-    if (v == null) null else hasher.histogram(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tGen = text.genCode(ctx)
-    val hRef = ctx.addReferenceObj("gramHasher", hasher, classOf[GramHasher].getName)
-    ev.copy(code = code"""
-      ${tGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${tGen.isNull}) {
-        ${ev.value} = $hRef.histogram(${tGen.value});
-        ${ev.isNull} = false;
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(text = newChildren(0), n = newChildren(1), buckets = newChildren(2))
+  override def compute(text: Any): Any = prepared.histogram(text.asInstanceOf[UTF8String])
 }
 
-/** The per-row kernel. Thread-local digest: expression reference objects
-  * are shared across an executor's concurrently-running tasks, and
-  * MessageDigest is not thread-safe. */
+/** The per-row kernel. Thread-local digest: one expression instance can
+  * serve concurrently-running tasks, and MessageDigest is not
+  * thread-safe. */
 final class GramHasher(n: Int, buckets: Int) extends Serializable {
 
   @transient private lazy val md =

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,37 +24,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * ordering contracts. Empty/NULL input → NULL (a ratio of nothing is
   * undefined, not 0 — keeps empty docs out of ratio-band filters).
   */
-case class DeflateRatio(child: Expression) extends UnaryExpression {
+case class DeflateRatio(child: Expression) extends Kernel[Unit] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"deflate_ratio requires a string input, got ${child.dataType.simpleString}")
-
+  protected def signature = Seq(Kernel.input(StringType))
+  protected def prepare(params: IndexedSeq[Any]): Unit = ()
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "deflate_ratio"
 
-  override def nullSafeEval(input: Any): Any =
-    DeflateRatio.ratio(input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |java.lang.Double r = graft.plans.DeflateRatio.ratio($c.getBytes());
-         |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object DeflateRatio {
-  /** Level-6 Deflate size over raw size; null for empty input. Static so
-    * generated code can call it directly. */
-  def ratio(bytes: Array[Byte]): java.lang.Double = {
-    if (bytes == null || bytes.length == 0) return null
+  /** Level-6 Deflate size over raw size; null for empty input. */
+  override def compute(text: Any): Any = {
+    val bytes = text.asInstanceOf[UTF8String].getBytes
+    if (bytes.length == 0) return null
     val d = new java.util.zip.Deflater(6, /*nowrap=*/ true)
     try {
       d.setInput(bytes)

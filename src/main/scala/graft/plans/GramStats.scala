@@ -1,11 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,49 +27,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * where the text already sits, zero exchanges and zero joins where the
   * exploded form shuffled every gram occurrence of every size (guide
   * §1.1: every output depends only on the one row's text). */
-case class GramStats(text: Expression, n: Expression) extends Expression {
+case class GramStats(text: Expression, n: Expression) extends Kernel[Int] {
 
-  override def children: Seq[Expression] = Seq(text, n)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (text.dataType == StringType && n.dataType == IntegerType && n.foldable) {
-      val k = n.eval().asInstanceOf[Int]
-      if (k > 0) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure("gram_stats: n must be > 0")
-    } else TypeCheckResult.TypeCheckFailure(
-      s"gram_stats: expects (string, int literal), got " +
-        s"(${text.dataType.simpleString}, ${n.dataType.simpleString})")
-
+  protected def signature = Seq(Kernel.input(StringType), Kernel.literal(IntegerType))
   override def dataType: DataType = StructType(Seq(
     StructField("max_c", LongType, nullable = false),
     StructField("tot", LongType, nullable = false),
     StructField("dup", LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "gram_stats"
+  override def nullable: Boolean = false // a NULL text has zero tokens
 
-  private lazy val nV: Int = n.eval().asInstanceOf[Int]
+  protected def prepare(params: IndexedSeq[Any]): Int = Kernel.positive("gram_stats: n", params(0))
 
-  override def eval(input: InternalRow): Any =
-    GramStats.compute(text.eval(input).asInstanceOf[UTF8String], nV)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tGen = text.genCode(ctx)
-    ev.copy(code = code"""
-      ${tGen.code}
-      boolean ${ev.isNull} = false;
-      InternalRow ${ev.value} = graft.plans.GramStats.compute(
-        ${tGen.isNull} ? null : ${tGen.value}, $nV);""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(text = newChildren(0), n = newChildren(1))
-}
-
-object GramStats {
-
-  /** See the class scaladoc for the exact semantics contract. */
-  def compute(text: UTF8String, n: Int): InternalRow = {
+  override def compute(t: Any): Any = {
+    val text = t.asInstanceOf[UTF8String]
+    val n = prepared
     if (text == null) return new GenericInternalRow(Array[Any](0L, 0L, 0L))
     val toks = new Tokens(text.getBytes, dropEmpty = false)
     if (toks.count < n) return new GenericInternalRow(Array[Any](0L, 0L, 0L))

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expression: 2D Hilbert-curve index of a pair of 16-bit
@@ -25,42 +23,18 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Sequential per-level integer arithmetic, identical two's-complement
   * semantics in Java longs and DuckDB BIGINTs, so the SQL oracle unrolls
   * the same 16 levels as MATERIALIZED CTEs and hash-matches every bit. */
-case class HilbertXy(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class HilbertXy(left: Expression, right: Expression) extends Kernel[Unit] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hilbert_xy: needs (long, long), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+  protected def signature = Seq(Kernel.input(LongType), Kernel.input(LongType))
+  protected def prepare(params: IndexedSeq[Any]): Unit = ()
+  override def dataType: DataType = LongType // out-of-range codes → null
 
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true // out-of-range codes → null
-  override def prettyName: String = "hilbert_xy"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
+  override def compute(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[Long]
     val y = b.asInstanceOf[Long]
     if (x < 0L || x > 65535L || y < 0L || y > 65535L) null
-    else java.lang.Long.valueOf(HilbertXy.encode(x, y))
+    else HilbertXy.encode(x, y)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |if ($a < 0L || $a > 65535L || $b < 0L || $b > 65535L) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.plans.HilbertXy.encode($a, $b);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object HilbertXy {

@@ -1,15 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native expression: int8 symmetric quantization of one vector in ONE
-  * generated loop — `int8_quantize(vec)` →
+  * loop per row — `int8_quantize(vec)` →
   * `struct<scale:double, codes:array<long>, max_abs_err:double>` with
   * `scale = max|x|/127`, `codes_i = trunc(x_i/scale)` (Java's double→long
   * cast truncates toward zero, the cross-engine [[ArgminDist2]]/kmeans
@@ -23,22 +19,16 @@ import org.apache.spark.sql.types._
   * DuckDB oracle verifies both forms. A NULL vector or a vector with a
   * NULL element yields NULL (the replaced HOF chain's null propagation).
   */
-case class Int8Quantize(child: Expression) extends UnaryExpression {
+case class Int8Quantize(child: Expression) extends Kernel[Unit] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"int8_quantize requires array<double>, got ${other.simpleString}")
-  }
-
+  protected def signature = Seq(Kernel.input(ArrayType(DoubleType)))
+  protected def prepare(params: IndexedSeq[Any]): Unit = ()
   override def dataType: DataType = StructType(Seq(
     StructField("scale", DoubleType, nullable = false),
     StructField("codes", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("max_abs_err", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "int8_quantize"
 
-  override def nullSafeEval(input: Any): Any = {
+  override def compute(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]
     val n = a.numElements()
     // null element → null result (the null-propagation contract of the
@@ -65,56 +55,4 @@ case class Int8Quantize(child: Expression) extends UnaryExpression {
     }
     new GenericInternalRow(Array[Any](scale, new GenericArrayData(codes), err))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val n = ctx.freshName("n")
-    val am = ctx.freshName("am")
-    val scale = ctx.freshName("scale")
-    val codes = ctx.freshName("codes")
-    val err = ctx.freshName("err")
-    val i = ctx.freshName("i")
-    val x = ctx.freshName("x")
-    val c = ctx.freshName("c")
-    val e = ctx.freshName("e")
-    val anyNull = ctx.freshName("anyNull")
-    ev.copy(code = code"""
-      ${childGen.code}
-      boolean ${ev.isNull} = ${childGen.isNull};
-      org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-      if (!${ev.isNull}) {
-        int $n = ${childGen.value}.numElements();
-        boolean $anyNull = false;
-        for (int $i = 0; $i < $n; $i++) {
-          if (${childGen.value}.isNullAt($i)) { $anyNull = true; break; }
-        }
-        ${ev.isNull} = $anyNull;
-      }
-      if (!${ev.isNull}) {
-        int $n = ${childGen.value}.numElements();
-        double $am = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = Math.abs(${childGen.value}.getDouble($i));
-          if ($x > $am) $am = $x;
-        }
-        double $scale = $am / 127.0;
-        long[] $codes = new long[$n];
-        double $err = 0.0;
-        if ($am != 0.0) {
-          for (int $i = 0; $i < $n; $i++) {
-            double $x = ${childGen.value}.getDouble($i);
-            long $c = (long) ($x / $scale);
-            $codes[$i] = $c;
-            double $e = Math.abs($x - (double) $c * $scale);
-            if ($e > $err) $err = $e;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          new Object[] { $scale,
-            new org.apache.spark.sql.catalyst.util.GenericArrayData($codes), $err });
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
@@ -20,8 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * with ~200 array-literal dot subtrees blows the JVM's 64 KB method limit,
   * falls back to interpreted evaluation, and re-materializes each plane
   * literal per row — measured ~5 s for 2 000 rows at sf0.1, dominating the
-  * whole near-dup query. Here the plane matrix is one cached reference
-  * object and the generated code is a tight triple loop (~0.1 s for the
+  * whole near-dup query. Here the plane matrix is resolved once per
+  * instance and each row runs one tight triple loop (~0.1 s for the
   * same input).
   *
   * Null/ragged semantics: a NULL vector, or one whose length differs from
@@ -30,95 +26,46 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * [[graft.operators.Similarity.withLshBucket]]).
   */
 case class LshBandKeys(vec: Expression, planes: Expression,
-                       bands: Expression, rows: Expression) extends Expression {
+                       bands: Expression, rows: Expression) extends Kernel[LshBandKeys.Planes] {
 
-  override def children: Seq[Expression] = Seq(vec, planes, bands, rows)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isDoubleArray(dt: DataType) = dt match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (!isDoubleArray(vec.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"lsh_band_keys: vec must be array<double>, got ${vec.dataType.simpleString}")
-    else if (!isDoubleArray(planes.dataType) || !planes.foldable)
-      TypeCheckResult.TypeCheckFailure("lsh_band_keys: planes must be a foldable array<double>")
-    else if (bands.dataType != IntegerType || !bands.foldable ||
-      rows.dataType != IntegerType || !rows.foldable)
-      TypeCheckResult.TypeCheckFailure("lsh_band_keys: bands/rows must be int literals")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
+  protected def signature = Seq(Kernel.input(ArrayType(DoubleType)),
+    Kernel.literal(ArrayType(DoubleType)), Kernel.literal(IntegerType), Kernel.literal(IntegerType))
+  protected def prepare(params: IndexedSeq[Any]) = new LshBandKeys.Planes(
+    params(0).asInstanceOf[ArrayData].toDoubleArray(), params(1).asInstanceOf[Int],
+    params(2).asInstanceOf[Int])
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "lsh_band_keys"
 
-  private lazy val bandsV: Int = bands.eval().asInstanceOf[Int]
-  private lazy val rowsV: Int = rows.eval().asInstanceOf[Int]
-  private lazy val planesV: Array[Double] =
-    planes.eval().asInstanceOf[ArrayData].toDoubleArray()
-  private lazy val dim: Int = planesV.length / (bandsV * rowsV)
-
-  override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
+  override def compute(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData]
+    val p = prepared
+    val planes = p.flat
+    val bands = p.bands
+    val rows = p.rows
+    val dim = p.dim
     if (a.numElements() != dim) return null
-    val keys = new Array[Long](bandsV)
+    val keys = new Array[Long](bands)
     var j = 0
-    while (j < bandsV) {
+    while (j < bands) {
       var bits = 0L
       var i = 0
-      while (i < rowsV) {
-        val off = (j * rowsV + i) * dim
+      while (i < rows) {
+        val off = (j * rows + i) * dim
         var s = 0.0
         var k = 0
-        while (k < dim) { s += a.getDouble(k) * planesV(off + k); k += 1 }
+        while (k < dim) { s += a.getDouble(k) * planes(off + k); k += 1 }
         if (s >= 0.0) bits |= (1L << i)
         i += 1
       }
-      keys(j) = bits | (j.toLong << rowsV)
+      keys(j) = bits | (j.toLong << rows)
       j += 1
     }
     new GenericArrayData(keys)
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vecGen = vec.genCode(ctx)
-    val planesRef = ctx.addReferenceObj("lshPlanes", planesV, "double[]")
-    val keys = ctx.freshName("keys")
-    val j = ctx.freshName("j")
-    val i = ctx.freshName("i")
-    val k = ctx.freshName("k")
-    val s = ctx.freshName("s")
-    val off = ctx.freshName("off")
-    val bits = ctx.freshName("bits")
-    ev.copy(code = code"""
-      ${vecGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${vecGen.isNull} && ${vecGen.value}.numElements() == $dim) {
-        long[] $keys = new long[$bandsV];
-        for (int $j = 0; $j < $bandsV; $j++) {
-          long $bits = 0L;
-          for (int $i = 0; $i < $rowsV; $i++) {
-            int $off = ($j * $rowsV + $i) * $dim;
-            double $s = 0.0;
-            for (int $k = 0; $k < $dim; $k++) {
-              $s += ${vecGen.value}.getDouble($k) * $planesRef[$off + $k];
-            }
-            if ($s >= 0.0) $bits |= (1L << $i);
-          }
-          $keys[$j] = $bits | ((long) $j << $rowsV);
-        }
-        ${ev.isNull} = false;
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($keys);
-      }""")
+object LshBandKeys {
+  /** The (bands·rows) × dim hyperplane matrix, flattened row-major. */
+  final class Planes(val flat: Array[Double], val bands: Int, val rows: Int) {
+    val dim: Int = flat.length / (bands * rows)
   }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(vec = newChildren(0), planes = newChildren(1),
-      bands = newChildren(2), rows = newChildren(3))
 }

@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
@@ -22,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * Why an expression instead of the explode → 128-min-aggregate pipeline:
   * the aggregate form materializes |shingles| rows per document, evaluates
   * 128 separate hash expression trees per row, and shuffles for the
-  * per-document groupBy. Here the whole signature is a tight generated loop
+  * per-document groupBy. Here the whole signature is a tight loop
   * over the in-row shingle array — no explode, no aggregation buffers, no
   * shuffle: at 100 TB the signature step becomes pure scan-stage compute
   * that pipelines into banding.
@@ -32,57 +28,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * candidate generation, matching the aggregate pipeline where such a
   * document simply has no shingle rows. NULL elements are skipped.
   */
-case class MinHashSig(shingles: Expression, numHashes: Expression) extends Expression {
+case class MinHashSig(shingles: Expression, numHashes: Expression) extends Kernel[Int] {
 
-  override def children: Seq[Expression] = Seq(shingles, numHashes)
-
-  override def checkInputDataTypes(): TypeCheckResult = shingles.dataType match {
-    case ArrayType(StringType, _)
-      if numHashes.dataType == IntegerType && numHashes.foldable =>
-      val n = numHashes.eval().asInstanceOf[Int]
-      if (n > 0) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure("minhash_sig: numHashes must be > 0")
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig: expects (array<string>, int literal), got " +
-        s"(${shingles.dataType.simpleString}, ${numHashes.dataType.simpleString})")
-  }
-
+  protected def signature = Seq(Kernel.input(ArrayType(StringType)), Kernel.literal(IntegerType))
+  protected def prepare(params: IndexedSeq[Any]): Int =
+    Kernel.positive("minhash_sig: numHashes", params(0))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "minhash_sig"
 
-  private lazy val numHashesV: Int = numHashes.eval().asInstanceOf[Int]
-
-  override def eval(input: InternalRow): Any = {
-    val v = shingles.eval(input)
-    if (v == null) null
-    else MinHashSig.compute(v.asInstanceOf[ArrayData], numHashesV)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val shGen = shingles.genCode(ctx)
-    // the loop lives in a shared static helper (also used by eval) — one
-    // call per row keeps the generated method tiny and the two paths
-    // arithmetically identical by construction
-    ev.copy(code = code"""
-      ${shGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${shGen.isNull}) {
-        ${ev.value} = graft.plans.MinHashSig.compute(${shGen.value}, $numHashesV);
-        ${ev.isNull} = (${ev.value} == null);
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(shingles = newChildren(0), numHashes = newChildren(1))
-}
-
-object MinHashSig {
-  /** sig[i] = min_s xxhash64(xxhash64(s), i), Spark seed 42 throughout.
-    * Returns null for an empty (or all-null) shingle array. */
-  def compute(arr: ArrayData, numHashes: Int): ArrayData = {
+  /** sig[i] = min_s xxhash64(xxhash64(s), i), Spark seed 42 throughout;
+    * null for an empty (or all-null) shingle array. */
+  override def compute(in: Any): Any = {
+    val arr = in.asInstanceOf[ArrayData]
+    val numHashes = prepared
     val n = arr.numElements()
     val sig = new Array[Long](numHashes)
     java.util.Arrays.fill(sig, Long.MaxValue)

@@ -1,11 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,22 +30,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * zero exchanges, zero joins, O(grams) hash-counting per row (guide §1.1:
   * every decision depends only on the two texts of one row, so the
   * theoretically cheapest execution is a single scan). */
-case class RougeClip(cand: Expression, ref: Expression, n: Expression)
-    extends Expression {
+case class RougeClip(cand: Expression, ref: Expression, n: Expression) extends Kernel[Int] {
 
-  override def children: Seq[Expression] = Seq(cand, ref, n)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (cand.dataType == StringType && ref.dataType == StringType &&
-        n.dataType == IntegerType && n.foldable) {
-      val k = n.eval().asInstanceOf[Int]
-      if (k > 0) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure("rouge_clip: n must be > 0")
-    } else TypeCheckResult.TypeCheckFailure(
-      s"rouge_clip: expects (string, string, int literal), got " +
-        s"(${cand.dataType.simpleString}, ${ref.dataType.simpleString}, " +
-        s"${n.dataType.simpleString})")
-
+  protected def signature =
+    Seq(Kernel.input(StringType), Kernel.input(StringType), Kernel.literal(IntegerType))
+  protected def prepare(params: IndexedSeq[Any]): Int = Kernel.positive("rouge_clip: n", params(0))
   override def dataType: DataType = StructType(Seq(
     StructField("clipped", LongType, nullable = false),
     StructField("cand_total", LongType, nullable = false),
@@ -57,30 +42,9 @@ case class RougeClip(cand: Expression, ref: Expression, n: Expression)
   // a NULL side simply has zero grams (the exploded form's when().otherwise
   // (empty-array) path), so the output struct itself is never null
   override def nullable: Boolean = false
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "rouge_clip"
 
-  private lazy val nV: Int = n.eval().asInstanceOf[Int]
-
-  override def eval(input: InternalRow): Any =
-    RougeClip.compute(cand.eval(input).asInstanceOf[UTF8String],
-      ref.eval(input).asInstanceOf[UTF8String], nV)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cGen = cand.genCode(ctx)
-    val rGen = ref.genCode(ctx)
-    // shared static helper keeps codegen and interpreted paths identical
-    ev.copy(code = code"""
-      ${cGen.code}
-      ${rGen.code}
-      boolean ${ev.isNull} = false;
-      InternalRow ${ev.value} = graft.plans.RougeClip.compute(
-        ${cGen.isNull} ? null : ${cGen.value},
-        ${rGen.isNull} ? null : ${rGen.value}, $nV);""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(cand = newChildren(0), ref = newChildren(1), n = newChildren(2))
+  override def compute(c: Any, r: Any): Any =
+    RougeClip.clip(c.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String], prepared)
 }
 
 object RougeClip {
@@ -96,7 +60,7 @@ object RougeClip {
   }
 
   /** See the class scaladoc for the exact semantics contract. */
-  def compute(cand: UTF8String, ref: UTF8String, n: Int): InternalRow = {
+  private def clip(cand: UTF8String, ref: UTF8String, n: Int): InternalRow = {
     val cg = grams(cand, n)
     val rg = grams(ref, n)
     val candTotal = if (cg == null) 0L else cg.length.toLong

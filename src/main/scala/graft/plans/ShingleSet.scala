@@ -1,11 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,53 +30,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * Here the whole set is one tight loop over the string's bytes
   * (~micro-seconds per document), and the hot paths
   * ([[graft.operators.Dedup.shingles]] and friends) inherit it. */
-case class ShingleSet(text: Expression, n: Expression) extends Expression {
+case class ShingleSet(text: Expression, n: Expression) extends Kernel[Int] {
 
-  override def children: Seq[Expression] = Seq(text, n)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (text.dataType == StringType && n.dataType == IntegerType && n.foldable) {
-      val k = n.eval().asInstanceOf[Int]
-      if (k > 0) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure("shingle_set: n must be > 0")
-    } else TypeCheckResult.TypeCheckFailure(
-      s"shingle_set: expects (string, int literal), got " +
-        s"(${text.dataType.simpleString}, ${n.dataType.simpleString})")
-
+  protected def signature = Seq(Kernel.input(StringType), Kernel.literal(IntegerType))
+  protected def prepare(params: IndexedSeq[Any]): Int = Kernel.positive("shingle_set: n", params(0))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   // the null-text path yields an empty array (see scaladoc), so the output
   // itself is never null
   override def nullable: Boolean = false
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "shingle_set"
 
-  private lazy val nV: Int = n.eval().asInstanceOf[Int]
-
-  override def eval(input: InternalRow): Any =
-    ShingleSet.compute(text.eval(input).asInstanceOf[UTF8String], nV)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tGen = text.genCode(ctx)
-    // shared static helper keeps codegen and interpreted paths identical
-    ev.copy(code = code"""
-      ${tGen.code}
-      boolean ${ev.isNull} = false;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        graft.plans.ShingleSet.compute(${tGen.isNull} ? null : ${tGen.value}, $nV);""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(text = newChildren(0), n = newChildren(1))
-}
-
-object ShingleSet {
-  private val EMPTY = new GenericArrayData(Array.empty[Any])
-
-  /** See the class scaladoc for the exact semantics contract. */
-  def compute(text: UTF8String, n: Int): ArrayData = {
-    if (text == null) return EMPTY
+  override def compute(t: Any): Any = {
+    val text = t.asInstanceOf[UTF8String]
+    val n = prepared
+    if (text == null) return ShingleSet.EMPTY
     val toks = new Tokens(text.getBytes, dropEmpty = false)
-    if (toks.count < n) return EMPTY
+    if (toks.count < n) return ShingleSet.EMPTY
     // n-word windows, deduped first-occurrence
     val seen = new java.util.LinkedHashSet[UTF8String]()
     var w = 0
@@ -91,4 +55,8 @@ object ShingleSet {
     while (it.hasNext) { arr(k) = it.next(); k += 1 }
     new GenericArrayData(arr)
   }
+}
+
+object ShingleSet {
+  private val EMPTY = new GenericArrayData(Array.empty[Any])
 }

@@ -1,11 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -26,109 +21,74 @@ import org.apache.spark.sql.types._
   * semantics are [[ArgminDist2]]'s: null in → null out, overflow raises.
   */
 case class Top2Dist2(vec: Expression, centroids: Expression, k: Expression)
-    extends Expression {
+    extends Kernel[Top2Dist2.Centroids] {
 
-  override def children: Seq[Expression] = Seq(vec, centroids, k)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isLongArray(dt: DataType) = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (!isLongArray(vec.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"top2_dist2: vec must be array<long>, got ${vec.dataType.simpleString}")
-    else if (!isLongArray(centroids.dataType) || !centroids.foldable)
-      TypeCheckResult.TypeCheckFailure("top2_dist2: centroids must be a foldable array<long>")
-    else if (k.dataType != IntegerType || !k.foldable)
-      TypeCheckResult.TypeCheckFailure("top2_dist2: k must be an int literal")
-    else if (k.eval().asInstanceOf[Int] < 2)
-      TypeCheckResult.TypeCheckFailure("top2_dist2: k must be >= 2 (a runner-up must exist)")
-    else TypeCheckResult.TypeCheckSuccess
+  protected def signature = Top2Dist2.signature
+  protected def prepare(params: IndexedSeq[Any]) = {
+    val c = new Top2Dist2.Centroids(params)
+    require(c.k >= 2, "top2_dist2: k must be >= 2 (a runner-up must exist)")
+    c
   }
-
   override def dataType: DataType = StructType(Seq(
     StructField("cluster", IntegerType, nullable = false),
     StructField("dist2", LongType, nullable = false),
     StructField("dist2b", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "top2_dist2"
 
-  private lazy val kV: Int = k.eval().asInstanceOf[Int]
-  private lazy val centroidsV: Array[Long] =
-    centroids.eval().asInstanceOf[ArrayData].toLongArray()
-  private lazy val dim: Int = centroidsV.length / kV
+  override def compute(v: Any): Any = {
+    val t = Top2Dist2.nearestTwo(v, prepared)
+    if (t == null) null else new GenericInternalRow(t)
+  }
+}
 
-  override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
+object Top2Dist2 {
+  /** `(vec array<long>, foldable centroids_flat array<long>, foldable k int)`,
+    * shared with [[ArgminDist2]]. */
+  val signature: Seq[Kernel.Arg] = Seq(Kernel.input(ArrayType(LongType)),
+    Kernel.literal(ArrayType(LongType)), Kernel.literal(IntegerType))
+
+  /** The k × dim centroid matrix, flattened row-major, from the
+    * `(centroids_flat, k)` literals. */
+  final class Centroids(params: IndexedSeq[Any]) {
+    val flat: Array[Long] = params(0).asInstanceOf[ArrayData].toLongArray()
+    val k: Int = params(1).asInstanceOf[Int]
+    val dim: Int = flat.length / k
+  }
+
+  /** `[cluster, dist2, dist2b]`: the nearest centroid (ties → smallest
+    * index), its exact squared L2 distance and the smallest distance over
+    * the other k − 1 centroids (Long.MaxValue when k = 1); null for a
+    * vector whose length differs from the centroid dim or that holds a
+    * NULL element. */
+  def nearestTwo(v: Any, c: Centroids): Array[Any] = {
     val a = v.asInstanceOf[ArrayData]
+    val flat = c.flat
+    val dim = c.dim
     if (a.numElements() != dim) return null
+    // null element → null result (the null-propagation semantics of the
+    // zip_with fold this replaced — a null component must not silently
+    // score as 0)
     var i = 0
     while (i < dim) { if (a.isNullAt(i)) return null; i += 1 }
     var best = 0
     var bestD = Long.MaxValue
     var secondD = Long.MaxValue
-    var c = 0
-    while (c < kV) {
+    var j = 0
+    while (j < c.k) {
       var s = 0L
       i = 0
-      val off = c * dim
+      val off = j * dim
       while (i < dim) {
-        val d = a.getLong(i) - centroidsV(off + i)
+        val d = a.getLong(i) - flat(off + i)
+        // exact arithmetic: wrap-around would deterministically pick a
+        // WRONG centroid; overflow must be loud (the ANSI-mode contract
+        // of the fold this replaced)
         s = Math.addExact(s, Math.multiplyExact(d, d))
         i += 1
       }
-      if (s < bestD) { secondD = bestD; bestD = s; best = c }
-      else if (s < secondD) { secondD = s }
-      c += 1
+      if (s < bestD) { secondD = bestD; bestD = s; best = j }
+      else if (s < secondD) secondD = s
+      j += 1
     }
-    new GenericInternalRow(Array[Any](best, bestD, secondD))
+    Array[Any](best, bestD, secondD)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vecGen = vec.genCode(ctx)
-    val ctRef = ctx.addReferenceObj("top2Centroids", centroidsV, "long[]")
-    val best = ctx.freshName("best")
-    val bestD = ctx.freshName("bestD")
-    val secondD = ctx.freshName("secondD")
-    val c = ctx.freshName("c")
-    val i = ctx.freshName("i")
-    val s = ctx.freshName("s")
-    val d = ctx.freshName("d")
-    val off = ctx.freshName("off")
-    val anyNull = ctx.freshName("anyNull")
-    ev.copy(code = code"""
-      ${vecGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-      if (!${vecGen.isNull} && ${vecGen.value}.numElements() == $dim) {
-        boolean $anyNull = false;
-        for (int $i = 0; $i < $dim; $i++) {
-          if (${vecGen.value}.isNullAt($i)) { $anyNull = true; break; }
-        }
-        if (!$anyNull) {
-          int $best = 0;
-          long $bestD = Long.MAX_VALUE;
-          long $secondD = Long.MAX_VALUE;
-          for (int $c = 0; $c < $kV; $c++) {
-            long $s = 0L;
-            int $off = $c * $dim;
-            for (int $i = 0; $i < $dim; $i++) {
-              long $d = ${vecGen.value}.getLong($i) - $ctRef[$off + $i];
-              $s = java.lang.Math.addExact($s, java.lang.Math.multiplyExact($d, $d));
-            }
-            if ($s < $bestD) { $secondD = $bestD; $bestD = $s; $best = $c; }
-            else if ($s < $secondD) { $secondD = $s; }
-          }
-          ${ev.isNull} = false;
-          ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            new Object[] { $best, $bestD, $secondD });
-        }
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(vec = newChildren(0), centroids = newChildren(1), k = newChildren(2))
 }

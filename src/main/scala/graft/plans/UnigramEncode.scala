@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,66 +28,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * (each position's best state depends on earlier positions through the
   * evolving tie-break path), inexpressible as built-in columns without
   * unrolling positions into the plan. The piece table is built ONCE per
-  * executor from the literal ([[BpeEncode]]'s reference-object pattern).
+  * expression instance from the literal (the [[Kernel]] prepared object).
   *
   * Null semantics: NULL word array → NULL; NULL / empty words skipped.
   */
 case class UnigramEncode(words: Expression, pieces: Expression, costs: Expression)
-    extends Expression {
+    extends Kernel[UnigramCodec] {
 
-  override def children: Seq[Expression] = Seq(words, pieces, costs)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (words.dataType, pieces.dataType, costs.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _), ArrayType(LongType, _))
-          if pieces.foldable && costs.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "unigram_encode: expects (array<string>, foldable array<string>, " +
-          "foldable array<bigint>), got (" +
-          s"${words.dataType.simpleString}, ${pieces.dataType.simpleString}, " +
-          s"${costs.dataType.simpleString})")
-    }
-
+  protected def signature = Seq(Kernel.input(ArrayType(StringType)),
+    Kernel.literal(ArrayType(StringType)), Kernel.literal(ArrayType(LongType)))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = "unigram_encode"
 
-  // built once per expression instance (per executor after serialization)
-  @transient private lazy val codec: UnigramCodec = {
-    val ps = pieces.eval().asInstanceOf[ArrayData]
-    val cs = costs.eval().asInstanceOf[ArrayData]
+  protected def prepare(params: IndexedSeq[Any]): UnigramCodec = {
+    val ps = params(0).asInstanceOf[ArrayData]
+    val cs = params(1).asInstanceOf[ArrayData]
     require(ps.numElements() == cs.numElements(),
       s"unigram_encode: ${ps.numElements()} pieces vs ${cs.numElements()} costs")
-    val tab = Array.tabulate(ps.numElements()) { i =>
+    new UnigramCodec(Array.tabulate(ps.numElements()) { i =>
       val p = ps.getUTF8String(i)
       require(p != null && p.numBytes() > 0, s"unigram_encode: piece $i null/empty")
       (p.toString, cs.getLong(i))
-    }
-    new UnigramCodec(tab)
+    })
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = words.eval(input)
-    if (v == null) null else codec.encode(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wGen = words.genCode(ctx)
-    val cRef = ctx.addReferenceObj("unigramCodec", codec, classOf[UnigramCodec].getName)
-    ev.copy(code = code"""
-      ${wGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${wGen.isNull}) {
-        ${ev.value} = $cRef.encode(${wGen.value});
-        ${ev.isNull} = false;
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(words = newChildren(0), pieces = newChildren(1), costs = newChildren(2))
+  override def compute(words: Any): Any = prepared.encode(words.asInstanceOf[ArrayData])
 }
 
 object UnigramCodec {
