@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -38,19 +38,12 @@ object BenchStreaming {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB provider everywhere: the store contract for 100 TB state
-      // (changelog-checkpointed, disk-spillable) — benching the default
-      // HDFS-backed in-memory store would flatter the numbers
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
+    // RocksDB provider everywhere: the store contract for 100 TB state
+    // (changelog-checkpointed, disk-spillable) — benching the default
+    // HDFS-backed in-memory store would flatter the numbers
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 

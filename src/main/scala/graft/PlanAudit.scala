@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-discipline audit (dev tool): prints the formatted physical plan of
   * selected registered queries plus a one-line shuffle/scan summary, so a
   * "this operator is single-shuffle" claim can be re-checked any time:
@@ -19,13 +17,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Bench.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

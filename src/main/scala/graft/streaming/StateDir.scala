@@ -5,7 +5,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The crash-safe publish protocol of a state dir — the one copy behind
   * the read-merge-rewrite sinks in [[Streaming]] and
-  * [[graft.operators.Scale.compactDir]].
+  * [[graft.operators.Scale.compactDir]]. The one exception is
+  * [[Streaming.incrementalNearDupSink]], whose append-only state commits
+  * by moving files in (its scaladoc says why); it shares the checked
+  * [[StateDir.rename]].
   *
   * A writer builds the complete new version of `<dir>` under [[next]]
   * (`<dir>_next`) and then calls [[publish]], which:
@@ -103,11 +106,16 @@ private[graft] final class StateDir(spark: SparkSession, dir: String, caller: St
   }
 
   private def rename(from: Path, to: Path, what: String): Unit =
-    if (!fs.rename(from, to)) throw new java.io.IOException(s"$caller: $what")
+    StateDir.rename(fs, from, to, s"$caller: $what")
 }
 
 private[graft] object StateDir {
   private val Marker = "_applied"
+
+  /** A checked rename: `FileSystem.rename` reports failure by returning
+    * false, and a swallowed false is silent data loss. */
+  def rename(fs: FileSystem, from: Path, to: Path, what: => String): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(what)
 
   /** Opens `dir` and runs [[StateDir.recover]] — every writer's first step. */
   def recovered(spark: SparkSession, dir: String, caller: String,

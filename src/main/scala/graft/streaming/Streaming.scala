@@ -269,7 +269,11 @@ object Streaming {
     * Row counts the gate needs (new docs, admitted candidates) ride on
     * `Dataset.observe` nodes inside those jobs ([[NdObsListener]]) — no
     * separate count jobs. COMMIT is then a metadata move of the staged
-    * part files into `sigs`.
+    * part files into `sigs`, each through the checked [[StateDir.rename]].
+    * This sink keeps its own commit instead of [[StateDir.publish]]
+    * because its state is append-only, one row per doc: `publish` swaps
+    * in a whole rebuilt dir, which would rewrite the full `sigs` table
+    * every batch — O(corpus) per batch instead of O(batch).
     *
     * Exactly-once composition: ids already in `sigs` are dropped first
     * (S6 anti-join gate), so a replayed batch recomputes nothing; pairs
@@ -630,12 +634,14 @@ object Streaming {
           "Some(higher)) or disable it with maxCandidatesPerDoc = None")
       }
       // COMMIT: move the staged part files into sigs (Spark part names
-      // carry a per-write UUID, so moves never collide)
+      // carry a per-write UUID, so moves never collide); a failed move
+      // throws before the staging dir is dropped, so the batch replays
       fs.mkdirs(new org.apache.hadoop.fs.Path(sigsDir)): Unit
       fs.listStatus(new org.apache.hadoop.fs.Path(staged)).foreach { f =>
         val nm = f.getPath.getName
         if (nm.startsWith("part-"))
-          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(s"$sigsDir/$nm")): Unit
+          StateDir.rename(fs, f.getPath, new org.apache.hadoop.fs.Path(s"$sigsDir/$nm"),
+            s"incrementalNearDupSink: failed to move ${f.getPath} into $sigsDir")
       }
       fs.delete(new org.apache.hadoop.fs.Path(staged), true): Unit
       nearDupTallies.put(stateDir,

@@ -110,6 +110,15 @@ class ScaleProbeSpec extends AnyFunSuite {
     assert(d.isEmpty, "replica user day spans drifted from base")
   }
 
+  test("synth writes a complete sf dir: every table loads, dims stay 1x, registry queries run") {
+    val base = "/root/testdata/sf0.001"
+    Tables.names.foreach(t => assert(!Tables.load(spark, outDir, t).isEmpty, t))
+    for (t <- Seq("region", "nation", "supplier"))
+      assert(Tables.load(spark, outDir, t).count() == Tables.load(spark, base, t).count(),
+        s"$t row count")
+    assert(!SparkEntry.queries("q5_region_revenue")(spark, outDir).isEmpty)
+  }
+
   test("chainPairs builds known components and dupGroups resolves them to the component min") {
     val pairs = ScaleProbe.chainPairs(spark, nPairs = 700, chainLen = 8)
     val groups = graft.operators.Dedup.dupGroups(pairs)

@@ -8,6 +8,21 @@ import graft.streaming.Streaming
 
 case class Ev(user_id: Long, ts: Timestamp, value: Double)
 
+/** `faultyfs:///<path>`: the local file system, except that while
+  * [[FaultyRenameFs.failSigsMoves]] is set every rename into a dir named
+  * `sigs` returns false, as a remote store's rename may. */
+class FaultyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faultyfs:///")
+  override def getScheme: String = "faultyfs"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (FaultyRenameFs.failSigsMoves && dst.getParent.getName == "sigs") false
+    else super.rename(src, dst)
+}
+
+object FaultyRenameFs {
+  @volatile var failSigsMoves = false
+}
+
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -68,6 +83,43 @@ class StreamingSpec extends AnyFunSuite {
     sink(df(corpus.drop(5)), 2L)
     assert(pairs() == expected)
     assert(spark.read.parquet(s"$dir/sigs").count() == corpus.size.toLong)
+  }
+
+  test("incremental near-dup sink: a failed move into sigs fails the batch, and its replay completes it") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faultyfs.impl", classOf[FaultyRenameFs].getName)
+    val dir = "faultyfs://" +
+      java.nio.file.Files.createTempDirectory("graft_nd_rename").toString + "/state"
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "the quick brown fox jumps over the lazy dog tonight"),
+      (3L, "completely different words appear in this other document here"),
+      (4L, "the quick brown fox jumps over the lazy dog today"),
+      (5L, "short text"),
+      (6L, "yet another entirely unrelated document with its own words"),
+      (7L, "the quick brown fox jumps over the lazy dog tomorrow"))
+    def df(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+    val sink = Streaming.incrementalNearDupSink("doc_id", "text", dir,
+      ngram = 5, threshold = 0.5) _
+    sink(df(corpus.take(2)), 0L)
+    // a swallowed false would drop the batch's staged docs with the
+    // staging dir while the checkpoint commits the batch: the sink must
+    // throw so the batch is not committed
+    FaultyRenameFs.failSigsMoves = true
+    val e = try intercept[java.io.IOException](sink(df(corpus.slice(2, 5)), 1L))
+      finally FaultyRenameFs.failSigsMoves = false
+    assert(e.getMessage.startsWith("incrementalNearDupSink: failed to move"), e.getMessage)
+    // the uncommitted batch replays once the store recovers
+    sink(df(corpus.slice(2, 5)), 1L)
+    sink(df(corpus.drop(5)), 2L)
+    val got = spark.read.parquet(s"$dir/pairs")
+      .orderBy($"doc_a", $"doc_b").as[(Long, Long, Double)].collect().toSeq
+    val expected = graft.operators.Dedup.nearDupPairs(
+        df(corpus), "doc_id", "text", 5, 0.5)
+      .orderBy($"doc_a", $"doc_b").as[(Long, Long, Double)].collect().toSeq
+    assert(got == expected && expected.nonEmpty)
+    val sigIds = spark.read.parquet(s"$dir/sigs").select($"doc_id").as[Long].collect().toSeq
+    assert(sigIds.sorted == corpus.map(_._1))
   }
 
   test("incremental near-dup sink: small and AQE execution profiles agree exactly") {
