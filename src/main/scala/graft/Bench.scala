@@ -27,9 +27,10 @@ object Bench {
   val noiseClass: Seq[String] =
     Seq("q_pagerank", "q_negative_sample", "q_audio_decode")
 
-  /** The session of Bench and of the dev mains Profile, ScaleProbe,
-    * PlanAudit and BenchStreaming: `local[cpus]` with one shuffle partition
-    * per core, AQE on, UTC, no UI, the graft kernels registered. */
+  /** The session of Bench, of the correctness dump Verify and of the dev
+    * mains Profile, ScaleProbe, PlanAudit and BenchStreaming: `local[cpus]`
+    * with one shuffle partition per core, AQE on, UTC, no UI, the graft
+    * kernels registered. */
   private[graft] def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

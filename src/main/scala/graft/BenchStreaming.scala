@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -44,10 +44,19 @@ object BenchStreaming {
     // HDFS-backed in-memory store would flatter the numbers
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sbench").toString
+    try run(spark, sfDir, cpus, tmp)
+    finally {
+      spark.stop()
+      // every section's state and checkpoint live under tmp
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp)): Unit
+    }
+  }
+
+  private def run(spark: SparkSession, sfDir: String,
+                  cpus: String, tmp: String): Unit = {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sbench").toString
     val events = Tables.load(spark, sfDir, "events")
       .select($"user_id", $"ts", coalesce($"value", lit(0.0)).as("value"),
         coalesce($"event_type", lit("?")).as("event_type"))
@@ -57,7 +66,7 @@ object BenchStreaming {
     // chunks.size is what each sink actually saw — with a corpus smaller
     // than the target batch count, grouped() yields fewer chunks, and
     // recording the constant would misdescribe the rows/s methodology
-    val chunks = events.grouped((events.length + 7) / 8).toSeq
+    val chunks = events.grouped((events.length + 7) / 8).map(_.toSeq).toSeq
     val nBatches = chunks.size
     val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
@@ -79,6 +88,30 @@ object BenchStreaming {
       results(name) = fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
       System.err.println(s"[sbench] $name: ${fields.toMap}")
     }
+
+    // One foreachBatch section: `input` in micro-batches through a
+    // MemoryStream, `project`ed, into `sink` over `$tmp/<name>_state`
+    // (checkpointed), the feed loop timed; `summary` reads the final
+    // state dir into the recorded fields.
+    def sinkSection[T: Encoder](name: String, input: => Seq[Seq[T]])(
+        project: Dataset[T] => DataFrame,
+        sink: String => (DataFrame, Long) => Unit)(
+        summary: String => Seq[(String, String)]): Unit = section(name) {
+      val stateDir = s"$tmp/${name}_state"
+      val batches = input
+      val mem = MemoryStream[T]
+      val q = project(mem.toDS()).writeStream
+        .option("checkpointLocation", s"$tmp/${name}_ckpt")
+        .foreachBatch(sink(stateDir))
+        .start()
+      val t0 = nowSec()
+      batches.foreach { c => mem.addData(c); q.processAllAvailable() }
+      val secs = nowSec() - t0
+      val fields = summary(stateDir)
+      q.stop()
+      record(name, batches.map(_.size.toLong).sum, batches.size, secs, fields)
+    }
+    def stateRows(dir: String) = "state_rows" -> spark.read.parquet(dir).count().toString
 
     // ---- 1. transformWithState sessionizer (event-time timers, ListState)
     section("sessionize") {
@@ -120,253 +153,104 @@ object BenchStreaming {
         "state_rows_final" -> openState.toString))
     }
 
-    // ---- 2. exactly-once incremental rollup ledger (A2 merge shape)
-    section("rollup") {
-      val stateDir = s"$tmp/rollup_state"
-      val ckpt = s"$tmp/rollup_ckpt"
-      val mem = MemoryStream[(Long, Double)]
-      val q = mem.toDS().toDF("user_id", "value")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.incrementalRollupSink(
-          "user_id", Seq("value"), Nil, stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c =>
-        mem.addData(c.map(e => (e.user_id, e.value)).toSeq)
-        q.processAllAvailable()
-      }
-      val secs = nowSec() - t0
-      val stateRows = spark.read.parquet(stateDir).count()
-      q.stop()
-      record("incremental_rollup", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> stateRows.toString))
-    }
+    // ---- 2-3g. the foreachBatch sinks: each section is its input, its
+    // projection, its sink and the fields it reads from the final state
+    sinkSection("incremental_rollup", chunks.map(_.map(e => (e.user_id, e.value))))(
+      _.toDF("user_id", "value"),
+      Streaming.incrementalRollupSink("user_id", Seq("value"), Nil, _))(
+      dir => Seq(stateRows(dir)))
 
-    // ---- 2b. golden-record survivorship maintenance (round 16): per-key
+    // golden-record survivorship maintenance (round 16): per-key
     // per-field newest-non-null fold — one state row per user, marker-
     // guarded replay, the MDM merge kept fresh (null event_types planted
     // so the per-field independence path actually executes)
-    section("golden_record") {
-      val stateDir = s"$tmp/golden_state"
-      val ckpt = s"$tmp/golden_ckpt"
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .select($"user_id", unix_micros($"ts").as("version"),
-          when($"value" > 75.0, null).otherwise($"event_type").as("event_type"),
-          $"value")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.goldenRecordSink(
-          "user_id", "version", Seq("event_type", "value"), stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val st = spark.read.parquet(stateDir)
-      val stateRows = st.count()
-      val folded = st.agg(sum($"n_records")).head().getLong(0)
-      q.stop()
-      record("golden_record", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> stateRows.toString,
-        "records_folded" -> folded.toString))
-    }
+    sinkSection("golden_record", chunks)(
+      _.toDF().select($"user_id", unix_micros($"ts").as("version"),
+        when($"value" > 75.0, null).otherwise($"event_type").as("event_type"),
+        $"value"),
+      Streaming.goldenRecordSink("user_id", "version", Seq("event_type", "value"), _))(
+      dir => Seq(stateRows(dir), "records_folded" ->
+        spark.read.parquet(dir).agg(sum($"n_records")).head().getLong(0).toString))
 
-    // ---- 3. continuous quality monitor (Expectations over the stream)
-    section("quality") {
-      val stateDir = s"$tmp/quality_state"
-      val ckpt = s"$tmp/quality_ckpt"
-      val rules = Seq(
-        graft.operators.Expectations.Rule("value_non_negative", col("value") >= 0),
-        graft.operators.Expectations.Rule("known_type",
-          col("event_type").isin("view", "click", "purchase")),
-        graft.operators.Expectations.Rule("user_present", col("user_id").isNotNull))
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.qualityMonitorSink(rules, stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val state = Streaming.qualityState(spark, stateDir)
-      val stateRows = state.count()
+    // continuous quality monitor (Expectations over the stream)
+    val rules = Seq(
+      graft.operators.Expectations.Rule("value_non_negative", col("value") >= 0),
+      graft.operators.Expectations.Rule("known_type",
+        col("event_type").isin("view", "click", "purchase")),
+      graft.operators.Expectations.Rule("user_present", col("user_id").isNotNull))
+    sinkSection("quality_monitor", chunks)(_.toDF(),
+      Streaming.qualityMonitorSink(rules, _)) { dir =>
+      val state = Streaming.qualityState(spark, dir)
       val worstRate = state.agg(max($"violation_rate")).head().getDouble(0)
-      q.stop()
-      record("quality_monitor", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> stateRows.toString,
-        "worst_violation_rate" -> f"$worstRate%.4f"))
+      Seq("state_rows" -> state.count().toString,
+        "worst_violation_rate" -> f"$worstRate%.4f")
     }
 
-    // ---- 3b. trending sink: incremental Misra-Gries k-counter summary.
-    // user_id as the item stream (near-uniform keys = the eviction-heavy
-    // WORST case for MG — every batch churns the counter set)
-    section("trending") {
-      val stateDir = s"$tmp/trend_state"
-      val ckpt = s"$tmp/trend_ckpt"
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.trendingSink("user_id", 100, stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val stateRows = spark.read.parquet(stateDir).count()
-      val nTot = Streaming.trendingMarker(spark, stateDir)._2
-      q.stop()
-      record("trending_mg", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> stateRows.toString,
-        "n_total" -> nTot.toString))
+    // trending sink: incremental Misra-Gries k-counter summary. user_id
+    // as the item stream (near-uniform keys = the eviction-heavy WORST
+    // case for MG — every batch churns the counter set)
+    sinkSection("trending_mg", chunks)(_.toDF(),
+      Streaming.trendingSink("user_id", 100, _))(
+      dir => Seq(stateRows(dir),
+        "n_total" -> Streaming.trendingMarker(spark, dir)._2.toString))
+
+    // streaming Pareto frontier: per batch one batch-grain skyline + a
+    // frontier-grain re-skyline (merge identity); state is the frontier
+    // itself — expected O(log n) rows
+    val usValue = (d: Dataset[SBenchEv]) =>
+      d.toDF().select($"user_id", unix_micros($"ts").as("us"), $"value")
+    sinkSection("skyline_frontier", chunks)(usValue,
+      Streaming.skylineSink("us", "value", _))(dir => Seq(stateRows(dir)))
+
+    // streaming EWMA: each key's smoothed level continued from stored
+    // state — key-grain state, batch-grain fold work
+    sinkSection("ewma_levels", chunks)(usValue,
+      Streaming.ewmaSink("user_id", Seq("us"), "value", 2, 4, _))(
+      dir => Seq(stateRows(dir)))
+
+    // streaming two-sided CUSUM monitor: per-user sequential change
+    // detection against a fixed target — ONE state row per key, integer
+    // fixed-point prefix-sum fold per micro-batch (round 15)
+    sinkSection("cusum_monitor", chunks)(usValue,
+      Streaming.cusumSink("user_id", Seq("us"), "value",
+        target = 50.0, slack = 5.0, threshold = 500.0, scale = 4, _))(
+      dir => Seq(stateRows(dir),
+        "alarms" -> spark.read.parquet(dir).filter($"alarm").count().toString))
+
+    // streaming HLL distinct: per-group sketch union — KB-grain state per
+    // group however long the stream runs
+    sinkSection("hll_distinct", chunks)(_.toDF().select($"event_type", $"user_id"),
+      Streaming.hllDistinctSink("event_type", "user_id", _)) { dir =>
+      val st = spark.read.parquet(dir).agg(count(lit(1)), sum(length($"sketch"))).head()
+      Seq("state_rows" -> st.getLong(0).toString,
+        "state_sketch_bytes" -> st.getLong(1).toString)
     }
 
-    // ---- 3c. streaming Pareto frontier: per batch one batch-grain
-    // skyline + a frontier-grain re-skyline (merge identity); state is
-    // the frontier itself — expected O(log n) rows
-    section("skyline") {
-      val stateDir = s"$tmp/sky_state"
-      val ckpt = s"$tmp/sky_ckpt"
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .select($"user_id", unix_micros($"ts").as("us"), $"value")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.skylineSink("us", "value", stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val stateRows = spark.read.parquet(stateDir).count()
-      q.stop()
-      record("skyline_frontier", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> stateRows.toString))
-    }
-
-    // ---- 3d. streaming EWMA: each key's smoothed level continued from
-    // stored state — key-grain state, batch-grain fold work
-    section("ewma") {
-      val stateDir = s"$tmp/ewma_state"
-      val ckpt = s"$tmp/ewma_ckpt"
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .select($"user_id", unix_micros($"ts").as("us"), $"value")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(
-          Streaming.ewmaSink("user_id", Seq("us"), "value", 2, 4, stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val stateRows = spark.read.parquet(stateDir).count()
-      q.stop()
-      record("ewma_levels", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> stateRows.toString))
-    }
-
-    // ---- 3e'. streaming two-sided CUSUM monitor: per-user sequential
-    // change detection against a fixed target — ONE state row per key,
-    // integer fixed-point prefix-sum fold per micro-batch (round 15)
-    section("cusum") {
-      val stateDir = s"$tmp/cusum_state"
-      val ckpt = s"$tmp/cusum_ckpt"
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .select($"user_id", unix_micros($"ts").as("us"), $"value")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.cusumSink("user_id", Seq("us"), "value",
-          target = 50.0, slack = 5.0, threshold = 500.0, scale = 4, stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val st = spark.read.parquet(stateDir)
-      val stateRows = st.count()
-      val alarms = st.filter($"alarm").count()
-      q.stop()
-      record("cusum_monitor", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> stateRows.toString, "alarms" -> alarms.toString))
-    }
-
-    // ---- 3e. streaming HLL distinct: per-group sketch union — KB-grain
-    // state per group however long the stream runs
-    section("hll") {
-      val stateDir = s"$tmp/hll_state"
-      val ckpt = s"$tmp/hll_ckpt"
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .select($"event_type", $"user_id")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.hllDistinctSink("event_type", "user_id", stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val st = spark.read.parquet(stateDir)
-        .agg(count(lit(1)), sum(length($"sketch"))).head()
-      q.stop()
-      record("hll_distinct", events.length.toLong, nBatches, secs, Seq(
-        "state_rows" -> st.getLong(0).toString,
-        "state_sketch_bytes" -> st.getLong(1).toString))
-    }
-
-    // ---- 3f. streaming PSI drift: reference frozen at batch 0, one
-    // ledger row per later batch — value-range-bounded state
-    section("psi") {
-      val stateDir = s"$tmp/psi_state"
-      val ckpt = s"$tmp/psi_ckpt"
-      val mem = MemoryStream[SBenchEv]
-      val q = mem.toDS().toDF()
-        .select($"value")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(Streaming.psiDriftSink("value", 10L, stateDir) _)
-        .start()
-      val t0 = nowSec()
-      chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val ledger = spark.read.parquet(s"$stateDir/ledger")
+    // streaming PSI drift: reference frozen at batch 0, one ledger row per
+    // later batch — value-range-bounded state
+    sinkSection("psi_drift", chunks)(_.toDF().select($"value"),
+      Streaming.psiDriftSink("value", 10L, _)) { dir =>
+      val ledger = spark.read.parquet(s"$dir/ledger")
       val worst = ledger.agg(max($"psi")).head().getDouble(0)
-      val n = ledger.count()
-      q.stop()
-      record("psi_drift", events.length.toLong, nBatches, secs, Seq(
-        "ledger_rows" -> n.toString,
-        "worst_psi" -> f"$worst%.4f"))
+      Seq("ledger_rows" -> ledger.count().toString, "worst_psi" -> f"$worst%.4f")
     }
 
-    // ---- 3g. streaming embedding-space drift: codebook frozen at the
-    // first freezable batch (fixed-point k-means), later batches score
+    // streaming embedding-space drift: codebook frozen at the first
+    // freezable batch (fixed-point k-means), later batches score
     // assignment-PSI + per-cluster centroid shift — k·dim + k + ledger
     // state however long the stream runs, map-only assignment per batch
-    section("embdrift") {
-      val stateDir = s"$tmp/embdrift_state"
-      val ckpt = s"$tmp/embdrift_ckpt"
+    sinkSection("embedding_drift", {
       val vecs = Tables.load(spark, sfDir, "embeddings")
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
         .as[(Long, Seq[Double])].collect()
-      val vchunks = vecs.grouped((vecs.length + 7) / 8).toSeq
-      val mem = MemoryStream[(Long, Seq[Double])]
-      val q = mem.toDS().toDF("vec_id", "embedding")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(
-          Streaming.embeddingDriftSink("vec_id", "embedding", 8, 2, stateDir) _)
-        .start()
-      val t0 = nowSec()
-      vchunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-      val secs = nowSec() - t0
-      val ledger = spark.read.parquet(s"$stateDir/ledger")
+      vecs.grouped((vecs.length + 7) / 8).map(_.toSeq).toSeq
+    })(_.toDF("vec_id", "embedding"),
+      Streaming.embeddingDriftSink("vec_id", "embedding", 8, 2, _)) { dir =>
+      val ledger = spark.read.parquet(s"$dir/ledger")
       val worst = ledger.agg(max($"assign_psi"), max($"max_shift")).head()
-      val n = ledger.count()
-      q.stop()
-      record("embedding_drift", vecs.length.toLong, vchunks.size, secs, Seq(
-        "ledger_rows" -> n.toString,
+      Seq("ledger_rows" -> ledger.count().toString,
         "worst_psi" -> f"${worst.getDouble(0)}%.4f",
-        "worst_shift" -> f"${worst.getDouble(1)}%.4f"))
+        "worst_shift" -> f"${worst.getDouble(1)}%.4f")
     }
 
     // ---- 4. persisted near-dup index sink (documents corpus). Two
@@ -538,6 +422,5 @@ object BenchStreaming {
       catch { case e: Throwable =>
         System.err.println(s"[sbench] could not write BENCH_STREAMING.json: ${e.getMessage}")
       }
-    spark.stop()
   }
 }

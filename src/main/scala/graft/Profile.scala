@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import scala.collection.mutable
 
 /** Job profiler (dev tool): runs each named query into the noop sink once
-  * untimed (codegen, JIT) and once measured, and reports what the final
+  * untimed (codegen, JIT) and three times measured, and reports
+  * the fastest run's seconds and, of the last run, what the final
   * `explain` cannot show for iterative or checkpointed operators — every
   * job the query launches, eager `localCheckpoint`s and driver collects
   * included:
@@ -20,6 +21,10 @@ import scala.collection.mutable
   * defaults are Bench's. For plans, use `PlanAudit <names>`.
   */
 object Profile {
+  /** Measured runs per query: Bench's min-of-3, so a ratio of two runs of
+    * this tool is not one run's noise. */
+  private val Runs = 3
+
   final case class Job(id: Int, desc: String, startMs: Long, endMs: Long)
 
   /** Counts the jobs and completed stages of the context it is added to.
@@ -101,11 +106,13 @@ object Profile {
       def run() = SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       run()
-      c.drain()
-      c.reset()
-      val t0 = System.nanoTime()
-      run()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = (1 to Runs).map { _ =>
+        c.drain()
+        c.reset()
+        val t0 = System.nanoTime()
+        run()
+        (System.nanoTime() - t0) / 1e9
+      }.min
       c.drain()
       val jobs = c.jobs
       println(f"[profile] $name%-28s jobs=${jobs.size}%-3d stages=${c.stages}%-4d " +

@@ -459,10 +459,7 @@ object Profiler {
     import org.apache.spark.sql.expressions.Window
     require(scale >= 0 && scale <= 6, s"cusum: scale $scale not in [0, 6]")
     val unit = math.pow(10, scale).toLong
-    val kFp = BigDecimal(slack).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
-      .underlying.unscaledValue.longValueExact
-    val hFp = BigDecimal(threshold).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
-      .underlying.unscaledValue.longValueExact
+    val (kFp, hFp) = (fixedPoint(slack, scale), fixedPoint(threshold, scale))
     val g = Window.partitionBy(col(group))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val run = Window.partitionBy(col(group)).orderBy(seq.map(col): _*)
@@ -1150,13 +1147,7 @@ object Profiler {
       s"alphaShift must be in [1, 32], got $alphaShift")
     require(scale >= 0 && scale <= 6, s"scale must be in [0, 6], got $scale")
     val unit = math.pow(10, scale).toLong
-    val xq = (col(x).cast(s"decimal(18,$scale)") * unit).cast("long")
-    val e = struct(seq.map(col) :+ xq.as("__xq"): _*)
-    series.filter(col(x).isNotNull)
-      .select(col(group), e.as("__e"))
-      .groupBy(col(group))
-      .agg(sort_array(collect_list(col("__e"))).as("__es"))
-      .withColumn("__xs", transform(col("__es"), v => v.getField("__xq")))
+    fixedPointSeries(series, group, seq, x, scale)
       .select(col(group),
         size(col("__xs")).cast("long").as("n_obs"),
         aggregate(
@@ -1166,6 +1157,29 @@ object Profiler {
       .withColumn("ewma",
         round(col("ewma_fp").cast("double") / unit.toDouble, scale))
   }
+
+  /** Per group, the non-null `x` values in `seq` order as one array
+    * `__xs` of int64s in 10^scale fixed-point units (`x` cast to
+    * decimal(18,scale) first, so the quantization is exact): (group,
+    * __xs). The one series builder behind [[ewmaSmooth]] and the ewma and
+    * cusum sinks of [[graft.streaming.Streaming]], so a sink folding batch
+    * by batch folds exactly the series this operator folds at once. */
+  private[graft] def fixedPointSeries(df: DataFrame, group: String, seq: Seq[String],
+                                      x: String, scale: Int): DataFrame = {
+    val xq = (col(x).cast(s"decimal(18,$scale)") * math.pow(10, scale).toLong).cast("long")
+    df.filter(col(x).isNotNull)
+      .select(col(group), struct(seq.map(col) :+ xq.as("__xq"): _*).as("__e"))
+      .groupBy(col(group))
+      .agg(sort_array(collect_list(col("__e"))).as("__es"))
+      .select(col(group), transform(col("__es"), v => v.getField("__xq")).as("__xs"))
+  }
+
+  /** `v` as an int64 in 10^scale fixed-point units, rounded half-up: the
+    * literal side of the fixed-point arithmetic of [[cusumTwoSided]] and
+    * the cusum sink. Throws when the result does not fit a long. */
+  private[graft] def fixedPoint(v: Double, scale: Int): Long =
+    BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
+      .underlying.unscaledValue.longValueExact
 
   /** PRECISION-RECALL CURVE of a scored, labeled frame — the threshold
     * calibration step between training a quality classifier and wiring

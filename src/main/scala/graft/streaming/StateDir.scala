@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The crash-safe publish protocol of a state dir — the one copy behind
   * the read-merge-rewrite sinks in [[Streaming]] and
@@ -33,7 +33,20 @@ import org.apache.spark.sql.SparkSession
   * `"<batchId> <n_total>"` for [[Streaming.trendingSink]]'s running
   * total. Sinks that are not replay-idempotent by themselves (counts,
   * folds, ledgers) carry it; last-write-wins upsert and compaction do
-  * not. */
+  * not.
+  *
+  * THE MICRO-BATCH APPLY. A single-table sink is one call of
+  * [[StateDir.applyBatch]] with its merge function, which runs, in this
+  * order:
+  *  1. [[recover]];
+  *  2. for marker sinks, skip a batch id at or below the applied one;
+  *  3. test the dir for state ([[StateDir.hasState]]);
+  *  4. read the live table, if there is one;
+  *  5. write the merge of it and the batch to [[next]];
+  *  6. [[publish]], with the batch id as the marker for marker sinks.
+  * Sinks whose marker carries more than the batch id, or whose state is
+  * several tables, call [[recovered]] and [[publish]] themselves and test
+  * for state with [[hasState]]. */
 private[graft] final class StateDir(spark: SparkSession, dir: String, caller: String) {
   /** Where the writer puts the complete new state before [[publish]]. */
   val next: String = dir + "_next"
@@ -93,6 +106,13 @@ private[graft] final class StateDir(spark: SparkSession, dir: String, caller: St
   /** The last applied batch id, -1 before the first publish. */
   def appliedBatch: Long = marker.fold(-1L)(_.head)
 
+  /** Whether the live dir holds state: [[StateDir.hasState]]. */
+  def hasState: Boolean = StateDir.hasState(fs, cur)
+
+  /** The live table, or None while the dir holds no state. */
+  def live: Option[DataFrame] =
+    if (hasState) Some(spark.read.parquet(dir)) else None
+
   /** Publishes [[next]] as the live dir: writes `marker` (when given) as
     * the last file in `_next`, then the checked two-rename swap. */
   def publish(marker: Long*): Unit = {
@@ -123,5 +143,47 @@ private[graft] object StateDir {
     val state = new StateDir(spark, dir, caller)
     state.recover(requireMarker)
     state
+  }
+
+  /** The "no state" rule, the one definition: `dir` holds state when it
+    * exists and has a visible entry. Hidden `_`/`.` entries do not count,
+    * directories included — a `_temporary` left by an interrupted write,
+    * the `_applied` marker and checksum files are no state — and a
+    * pre-created empty dir is no state, so neither sends the first batch
+    * into a parquet read of a dir with no data files. The test goes
+    * through the dir's own Hadoop FileSystem: a `java.io.File` check would
+    * be local-only and silently skip the merge for s3a://, hdfs:// or
+    * file:// dirs. */
+  def hasState(spark: SparkSession, dir: String): Boolean = {
+    val path = new Path(dir)
+    hasState(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+  }
+
+  private def hasState(fs: FileSystem, path: Path): Boolean =
+    fs.exists(path) && fs.listStatus(path).exists { st =>
+      val n = st.getPath.getName
+      !(n.startsWith("_") || n.startsWith("."))
+    }
+
+  /** One micro-batch of a single-table sink, the apply sequence of the
+    * class scaladoc. `merge` gets the live table, or None before the
+    * first batch, and returns the complete new state.
+    *
+    * Only "no state yet" skips the merge with the stored table. Any other
+    * failure — a union or schema mismatch, an unreadable table — fails
+    * the batch: swallowed, it would overwrite `_next` with the batch
+    * alone and publish a state that silently dropped everything stored.
+    *
+    * `batchId = Some(id)` is a marker sink: recovery requires the marker,
+    * a replayed batch is skipped, and `id` is published as the marker.
+    * `None` is for state that a replay merges to the same result
+    * (last-write-wins): no marker and no replay skip. */
+  def applyBatch(spark: SparkSession, dir: String, caller: String, batchId: Option[Long])
+                (merge: Option[DataFrame] => DataFrame): Unit = {
+    val state = recovered(spark, dir, caller, requireMarker = batchId.isDefined)
+    if (!batchId.exists(_ <= state.appliedBatch)) {
+      merge(state.live).write.mode("overwrite").parquet(state.next)
+      state.publish(batchId.toSeq: _*)
+    }
   }
 }

@@ -66,23 +66,6 @@ object Streaming {
       .select(col("user_id"), col("window.start").as("hour_ts"),
         col("n_events"), col("sum_value"))
 
-  /** "State table exists" through the Hadoop FileSystem of the path — a
-    * `java.io.File` check would be local-only and silently skip the merge
-    * for s3a://, hdfs://, or file:// state dirs. A directory that exists
-    * but holds no data files counts as no-state (a pre-created empty dir
-    * must not crash-loop the first batch). */
-  private def stateExists(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // hidden-prefix exclusion applies to directories too: a `_temporary`
-    // left by an interrupted write must not count as state (it would send
-    // the next batch into spark.read on a dir with no data files)
-    fs.exists(path) && fs.listStatus(path).exists { st =>
-      val n = st.getPath.getName
-      !(n.startsWith("_") || n.startsWith("."))
-    }
-  }
-
   /** ST5 stretch — sliding windows: each event lands in window/slide
     * overlapping windows (e.g. hourly metrics refreshed every 15 min). */
   def slidingEngagement(events: DataFrame, watermark: String = "10 minutes",
@@ -363,8 +346,8 @@ object Streaming {
         // conservative (anti-joined) pairs path.
         fs.delete(new org.apache.hadoop.fs.Path(stagingRoot), true): Unit
         NearDupTally(
-          if (stateExists(spark, sigsDir)) spark.read.parquet(sigsDir).count() else 0L,
-          if (stateExists(spark, pairsDir)) spark.read.parquet(pairsDir).count() else 0L)
+          if (StateDir.hasState(spark, sigsDir)) spark.read.parquet(sigsDir).count() else 0L,
+          if (StateDir.hasState(spark, pairsDir)) spark.read.parquet(pairsDir).count() else 0L)
       }
       // fresh-batch fast path (see NearDupTally scaladoc): provably not a
       // replay => a new pair cannot already be persisted, skip the dedupe
@@ -386,9 +369,9 @@ object Streaming {
       val pairSchema = StructType(Seq(
         StructField("doc_a", idType), StructField("doc_b", idType),
         StructField("jaccard", DoubleType)))
-      val sigsState = if (stateExists(spark, sigsDir))
+      val sigsState = if (StateDir.hasState(spark, sigsDir))
         Some(spark.read.schema(sigSchema).parquet(sigsDir)) else None
-      val pairsState = if (!freshBatch && stateExists(spark, pairsDir))
+      val pairsState = if (!freshBatch && StateDir.hasState(spark, pairsDir))
         Some(spark.read.schema(pairSchema).parquet(pairsDir)) else None
       val incoming = graft.operators.Ops.dedupFirstWins(
         batch.select(col(idCol), col(textCol))
@@ -693,11 +676,10 @@ object Streaming {
       case rest => rest.toSeq.map(col)
     }
     val deduped = graft.operators.Ops.dedupFirstWins(batch, Seq(keyCol), tiebreak)
-    // only "state does not exist yet" may fall through to the no-state path;
-    // any other failure (schema drift, missing key column) must fail loudly —
-    // swallowing it would append duplicates and break exactly-once
+    // only "no state yet" skips the anti-join, the StateDir.applyBatch rule:
+    // a swallowed failure here would append duplicates (exactly-once lost)
     val fresh =
-      if (stateExists(batch.sparkSession, stateDir))
+      if (StateDir.hasState(spark, stateDir))
         deduped.join(spark.read.parquet(stateDir).select(col(keyCol)),
           Seq(keyCol), "left_anti")
       else deduped
@@ -734,26 +716,19 @@ object Streaming {
     * per key replaces state. `versionCol` orders writes (batch id, event ts,
     * …); rewrite of the key partition is modeled as read-union-dedup-write,
     * which is the foreachBatch MERGE shape for any keyed table format.
-    * Published through [[StateDir]] without a marker (a replay re-merges
-    * the same rows to the same result). */
+    * Applied by [[StateDir.applyBatch]] without a marker (a replay
+    * re-merges the same rows to the same result); its publish stands in
+    * for a transactional table commit. */
   def upsertLastWinsSink(keyCol: String, versionCol: String, stateDir: String)
-                        (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val state = StateDir.recovered(spark, stateDir, "upsertLastWinsSink", requireMarker = false)
-    // ties on version prefer the incoming row (the later write wins);
-    // only "no state yet" skips the merge — a union/schema failure must
-    // propagate, else the overwrite below would silently drop all state
-    val incoming = batch.withColumn("__p", lit(1))
-    val merged =
-      if (stateExists(batch.sparkSession, stateDir))
-        incoming.unionByName(spark.read.parquet(stateDir).withColumn("__p", lit(0)))
-      else incoming
-    graft.operators.Ops
-      .dedupFirstWins(merged, Seq(keyCol), Seq(col(versionCol).desc, col("__p").desc))
-      .drop("__p")
-      .write.mode("overwrite").parquet(state.next)
-    state.publish() // swap stand-in for a transactional table commit
-  }
+                        (batch: DataFrame, batchId: Long): Unit =
+    StateDir.applyBatch(batch.sparkSession, stateDir, "upsertLastWinsSink", None) { live =>
+      // ties on version prefer the incoming row (the later write wins)
+      val incoming = batch.withColumn("__p", lit(1))
+      val merged = live.fold(incoming)(s => incoming.unionByName(s.withColumn("__p", lit(0))))
+      graft.operators.Ops
+        .dedupFirstWins(merged, Seq(keyCol), Seq(col(versionCol).desc, col("__p").desc))
+        .drop("__p")
+    }
 
   /** A2 ⊕ S7 — incremental MATERIALIZED-VIEW maintenance: each micro-batch
     * is aggregated to per-key partials, merged with the stored rollup via
@@ -766,25 +741,17 @@ object Streaming {
     * not the history.
     *
     * NOT idempotent under replay by itself (counts would double), so it
-    * carries the [[StateDir]] batch-id marker: a replayed batchId is
-    * skipped. */
+    * is applied by [[StateDir.applyBatch]] with the batch-id marker: a
+    * replayed batchId is skipped. */
   def incrementalRollupSink(keyCol: String, sums: Seq[String], maxes: Seq[String],
-                            stateDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val state = StateDir.recovered(spark, stateDir, "incrementalRollupSink", requireMarker = true)
-    if (batchId <= state.appliedBatch) return // replayed batch: already merged
-    val aggs = sums.map(c => sum(col(c)).as(c)) ++ maxes.map(c => max(col(c)).as(c))
-    val partial = batch.groupBy(col(keyCol))
-      .agg(aggs.head, aggs.tail: _*)
-    val merged =
-      if (stateExists(spark, stateDir))
-        graft.operators.Ops.mergePartials(
-          partial.unionByName(spark.read.parquet(stateDir)),
-          Seq(keyCol), sums, maxes)
-      else partial
-    merged.write.mode("overwrite").parquet(state.next)
-    state.publish(batchId)
-  }
+                            stateDir: String)(batch: DataFrame, batchId: Long): Unit =
+    StateDir.applyBatch(batch.sparkSession, stateDir, "incrementalRollupSink", Some(batchId)) { live =>
+      val aggs = sums.map(c => sum(col(c)).as(c)) ++ maxes.map(c => max(col(c)).as(c))
+      val partial = batch.groupBy(col(keyCol))
+        .agg(aggs.head, aggs.tail: _*)
+      live.fold(partial)(s =>
+        graft.operators.Ops.mergePartials(partial.unionByName(s), Seq(keyCol), sums, maxes))
+    }
 
   /** S7 ⊕ [[graft.operators.Dedup.goldenRecord]] — streaming GOLDEN-RECORD
     * (survivorship) maintenance: the MDM merge kept fresh as records
@@ -809,42 +776,32 @@ object Streaming {
     * the upsert sink's convention).
     *
     * `n_records` is a count, so the sink is NOT idempotent under replay
-    * by itself: it carries the [[StateDir]] batch-id marker, and a
-    * replayed batchId is skipped. */
+    * by itself: it is applied by [[StateDir.applyBatch]] with the
+    * batch-id marker, and a replayed batchId is skipped. */
   def goldenRecordSink(keyCol: String, versionCol: String, fields: Seq[String],
-                       stateDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val state = StateDir.recovered(spark, stateDir, "goldenRecordSink", requireMarker = true)
-    if (batchId <= state.appliedBatch) return // replayed batch: already folded
-    // per-field provenance for fresh rows: the row's own version where
-    // the field is non-null (state rows arrive with provenance already
-    // attached, possibly OLDER than their key's max version)
-    val incoming = fields.foldLeft(
-        batch.select((keyCol +: versionCol +: fields).map(col): _*)
-          .withColumn("__p", lit(1L)).withColumn("n_records", lit(1L))) {
-      (d, f) => d.withColumn(s"__v_$f", when(col(f).isNotNull, col(versionCol)))
+                       stateDir: String)(batch: DataFrame, batchId: Long): Unit =
+    StateDir.applyBatch(batch.sparkSession, stateDir, "goldenRecordSink", Some(batchId)) { live =>
+      // per-field provenance for fresh rows: the row's own version where
+      // the field is non-null (state rows arrive with provenance already
+      // attached, possibly OLDER than their key's max version)
+      val incoming = fields.foldLeft(
+          batch.select((keyCol +: versionCol +: fields).map(col): _*)
+            .withColumn("__p", lit(1L)).withColumn("n_records", lit(1L))) {
+        (d, f) => d.withColumn(s"__v_$f", when(col(f).isNotNull, col(versionCol)))
+      }
+      val merged = live.fold(incoming)(s => incoming.unionByName(s.withColumn("__p", lit(0L))))
+      // one hash aggregation does all of it (map-side partials, no window
+      // sort, no join): per field, the value whose (provenance, __p) key is
+      // max among non-null values — max_by skips rows whose key expression
+      // is null, so null field values never displace a survivor
+      val aggs: Seq[org.apache.spark.sql.Column] =
+        (max(col(versionCol)).as(versionCol) +:
+          fields.flatMap { f =>
+            val key = when(col(f).isNotNull, struct(col(s"__v_$f"), col("__p")))
+            Seq(max_by(col(f), key).as(f), max(col(s"__v_$f")).as(s"__v_$f"))
+          }) :+ sum(col("n_records")).as("n_records")
+      merged.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
     }
-    // only "no state yet" skips the fold — any read/union failure must
-    // propagate, else the overwrite below would silently drop all state
-    val merged =
-      if (stateExists(spark, stateDir))
-        incoming.unionByName(
-          spark.read.parquet(stateDir).withColumn("__p", lit(0L)))
-      else incoming
-    // one hash aggregation does all of it (map-side partials, no window
-    // sort, no join): per field, the value whose (provenance, __p) key is
-    // max among non-null values — max_by skips rows whose key expression
-    // is null, so null field values never displace a survivor
-    val aggs: Seq[org.apache.spark.sql.Column] =
-      (max(col(versionCol)).as(versionCol) +:
-        fields.flatMap { f =>
-          val key = when(col(f).isNotNull, struct(col(s"__v_$f"), col("__p")))
-          Seq(max_by(col(f), key).as(f), max(col(s"__v_$f")).as(s"__v_$f"))
-        }) :+ sum(col("n_records")).as("n_records")
-    merged.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(state.next)
-    state.publish(batchId)
-  }
 
   /** STREAMING φ-FREQUENT ITEMS (trending) — an incremental MISRA–GRIES
     * summary over an unbounded item stream, the streaming twin of
@@ -877,11 +834,8 @@ object Streaming {
       .filter(col("item").isNotNull)
       .groupBy(col("item")).agg(count(lit(1)).as("est"))
     val nBatch = counts.agg(coalesce(sum(col("est")), lit(0L))).collect()(0).getLong(0)
-    val merged = (
-      if (stateExists(spark, stateDir))
-        counts.unionByName(spark.read.parquet(stateDir))
-          .groupBy(col("item")).agg(sum(col("est")).as("est"))
-      else counts
+    val merged = state.live.fold(counts)(s =>
+      counts.unionByName(s).groupBy(col("item")).agg(sum(col("est")).as("est"))
     ).localCheckpoint()
     val topK1 = merged.orderBy(col("est").desc, col("item")).limit(k + 1).collect()
     val d = if (topK1.length <= k) 0L else topK1.last.getLong(1)
@@ -914,24 +868,16 @@ object Streaming {
     * an anti-correlated stream legitimately grows it and the 2D plan
     * stays frontier-linear either way.
     *
-    * Crash/replay discipline is [[StateDir]]'s (batch-id marker): a
-    * replayed batch is skipped. */
+    * Applied by [[StateDir.applyBatch]] (batch-id marker): a replayed
+    * batch is skipped. */
   def skylineSink(x: String, y: String, stateDir: String)
-                 (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val state = StateDir.recovered(spark, stateDir, "skylineSink", requireMarker = true)
-    if (batchId <= state.appliedBatch) return // replayed batch: no-op
-    val bSky = graft.operators.Skyline.skyline2d(batch, x, y)
-    val merged =
-      if (stateExists(spark, stateDir))
-        // frontier-grain re-skyline: no prune stage (pruneBuckets = 1)
-        graft.operators.Skyline.skyline2d(
-          bSky.unionByName(spark.read.parquet(stateDir)), x, y,
-          pruneBuckets = 1)
-      else bSky
-    merged.write.mode("overwrite").parquet(state.next)
-    state.publish(batchId)
-  }
+                 (batch: DataFrame, batchId: Long): Unit =
+    StateDir.applyBatch(batch.sparkSession, stateDir, "skylineSink", Some(batchId)) { live =>
+      val bSky = graft.operators.Skyline.skyline2d(batch, x, y)
+      // frontier-grain re-skyline: no prune stage (pruneBuckets = 1)
+      live.fold(bSky)(s =>
+        graft.operators.Skyline.skyline2d(bSky.unionByName(s), x, y, pruneBuckets = 1))
+    }
 
   /** STREAMING EWMA — each key's smoothed level ([[graft.operators
     * .Profiler.ewmaSmooth]]) maintained incrementally: the recursion
@@ -944,41 +890,30 @@ object Streaming {
     * streaming-EWMA contract: the fold order IS arrival order; within a
     * batch the `seq` columns sort).
     *
-    * Crash/replay discipline is [[StateDir]]'s (batch-id marker). */
+    * Applied by [[StateDir.applyBatch]] (batch-id marker); the batch's
+    * series is [[graft.operators.Profiler.fixedPointSeries]], the one
+    * `ewmaSmooth` folds. */
   def ewmaSink(group: String, seq: Seq[String], x: String,
                alphaShift: Int, scale: Int, stateDir: String)
               (batch: DataFrame, batchId: Long): Unit = {
     require(alphaShift >= 1 && alphaShift <= 32 && scale >= 0 && scale <= 6,
       s"ewmaSink: bad alphaShift=$alphaShift / scale=$scale")
-    val spark = batch.sparkSession
-    val state = StateDir.recovered(spark, stateDir, "ewmaSink", requireMarker = true)
-    if (batchId <= state.appliedBatch) return // replayed batch: no-op
-    val unit = math.pow(10, scale).toLong
-    val xq = (col(x).cast(s"decimal(18,$scale)") * unit).cast("long")
-    val e = struct(seq.map(col) :+ xq.as("__xq"): _*)
-    val b = batch.filter(col(x).isNotNull)
-      .select(col(group), e.as("__e"))
-      .groupBy(col(group))
-      .agg(sort_array(collect_list(col("__e"))).as("__es"))
-      .select(col(group), transform(col("__es"), v => v.getField("__xq")).as("__xs"))
-    val step = (acc: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) => acc + shiftright(v - acc, alphaShift)
-    val merged = (
-      if (stateExists(spark, stateDir))
-        b.join(spark.read.parquet(stateDir), Seq(group), "full")
-      else b.withColumn("n_obs", lit(null).cast("long"))
-        .withColumn("ewma_fp", lit(null).cast("long"))
-    ).select(col(group),
-      (coalesce(col("n_obs"), lit(0L)) +
-        coalesce(size(col("__xs")), lit(0)).cast("long")).as("n_obs"),
-      when(col("__xs").isNull, col("ewma_fp")) // key silent this batch
-        .when(col("ewma_fp").isNull, // new key: first obs seeds the fold
-          aggregate(slice(col("__xs"), lit(2), greatest(size(col("__xs")) - 1, lit(0))),
-            element_at(col("__xs"), 1), step))
-        .otherwise( // continuing key: stored level seeds the fold
-          aggregate(col("__xs"), col("ewma_fp"), step))
-        .as("ewma_fp"))
-    merged.write.mode("overwrite").parquet(state.next)
-    state.publish(batchId)
+    StateDir.applyBatch(batch.sparkSession, stateDir, "ewmaSink", Some(batchId)) { live =>
+      val b = graft.operators.Profiler.fixedPointSeries(batch, group, seq, x, scale)
+      val step = (acc: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) => acc + shiftright(v - acc, alphaShift)
+      live.fold(b.withColumn("n_obs", lit(null).cast("long"))
+          .withColumn("ewma_fp", lit(null).cast("long")))(s => b.join(s, Seq(group), "full"))
+        .select(col(group),
+          (coalesce(col("n_obs"), lit(0L)) +
+            coalesce(size(col("__xs")), lit(0)).cast("long")).as("n_obs"),
+          when(col("__xs").isNull, col("ewma_fp")) // key silent this batch
+            .when(col("ewma_fp").isNull, // new key: first obs seeds the fold
+              aggregate(slice(col("__xs"), lit(2), greatest(size(col("__xs")) - 1, lit(0))),
+                element_at(col("__xs"), 1), step))
+            .otherwise( // continuing key: stored level seeds the fold
+              aggregate(col("__xs"), col("ewma_fp"), step))
+            .as("ewma_fp"))
+    }
   }
 
   /** STREAMING DISTINCT-COUNT (HLL) — per-group approximate distinct
@@ -993,32 +928,25 @@ object Streaming {
     * stores a per-item table, which is the entire point at 100 TB
     * ("distinct users per source, ever" costs group-grain state).
     *
-    * Crash/replay discipline is [[StateDir]]'s (batch-id marker). HLL
-    * union with itself IS idempotent, so a replay could not double-count;
-    * the marker still skips replays so the discipline stays uniform with
-    * the non-idempotent sinks. */
+    * Applied by [[StateDir.applyBatch]] (batch-id marker). HLL union
+    * with itself IS idempotent, so a replay could not double-count; the
+    * marker still skips replays so the discipline stays uniform with the
+    * non-idempotent sinks. */
   def hllDistinctSink(group: String, item: String, stateDir: String,
                       lgConfigK: Int = 12)
-                     (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val state = StateDir.recovered(spark, stateDir, "hllDistinctSink", requireMarker = true)
-    if (batchId <= state.appliedBatch) return // replayed batch: no-op
-    val b = batch.filter(col(item).isNotNull)
-      .groupBy(col(group))
-      .agg(hll_sketch_agg(col(item), lit(lgConfigK)).as("__bs"))
-    val merged = (
-      if (stateExists(spark, stateDir))
-        b.join(spark.read.parquet(stateDir).select(col(group), col("sketch")),
-          Seq(group), "full")
-      else b.withColumn("sketch", lit(null).cast("binary"))
-    ).select(col(group),
-        when(col("__bs").isNull, col("sketch"))
-          .when(col("sketch").isNull, col("__bs"))
-          .otherwise(hll_union(col("sketch"), col("__bs"))).as("sketch"))
-      .withColumn("n_distinct_est", hll_sketch_estimate(col("sketch")))
-    merged.write.mode("overwrite").parquet(state.next)
-    state.publish(batchId)
-  }
+                     (batch: DataFrame, batchId: Long): Unit =
+    StateDir.applyBatch(batch.sparkSession, stateDir, "hllDistinctSink", Some(batchId)) { live =>
+      val b = batch.filter(col(item).isNotNull)
+        .groupBy(col(group))
+        .agg(hll_sketch_agg(col(item), lit(lgConfigK)).as("__bs"))
+      live.fold(b.withColumn("sketch", lit(null).cast("binary")))(s =>
+          b.join(s.select(col(group), col("sketch")), Seq(group), "full"))
+        .select(col(group),
+          when(col("__bs").isNull, col("sketch"))
+            .when(col("sketch").isNull, col("__bs"))
+            .otherwise(hll_union(col("sketch"), col("__bs"))).as("sketch"))
+        .withColumn("n_distinct_est", hll_sketch_estimate(col("sketch")))
+    }
 
   /** STREAMING TWO-SIDED CUSUM MONITOR — the sequential change detector
     * as a sink, beside the distributional [[psiDriftSink]]: per key, the
@@ -1034,74 +962,60 @@ object Streaming {
     * state is ONE row per key. Batches must arrive in observation order
     * (the ewmaSink contract); within a batch the `seq` columns sort.
     *
-    * Crash/replay discipline is [[StateDir]]'s (batch-id marker,
-    * marker-checked recovery). State/output: (group, n_obs, p_pos,
-    * min_pos, smax_pos, p_neg, min_neg, smax_neg, alarm) with alarm =
-    * either S_max > h. */
+    * Applied by [[StateDir.applyBatch]] (batch-id marker, marker-checked
+    * recovery); the batch's series is [[graft.operators.Profiler
+    * .fixedPointSeries]], the ewmaSink one. State/output: (group, n_obs,
+    * p_pos, min_pos, smax_pos, p_neg, min_neg, smax_neg, alarm) with
+    * alarm = either S_max > h. */
   def cusumSink(group: String, seq: Seq[String], x: String,
                 target: Double, slack: Double, threshold: Double,
                 scale: Int, stateDir: String)
                (batch: DataFrame, batchId: Long): Unit = {
     require(scale >= 0 && scale <= 6, s"cusumSink: scale $scale not in [0, 6]")
-    val spark = batch.sparkSession
-    val state = StateDir.recovered(spark, stateDir, "cusumSink", requireMarker = true)
-    if (batchId <= state.appliedBatch) return // replayed batch: no-op
-    val unit = math.pow(10, scale).toLong
-    def fp(v: Double): Long = BigDecimal(v)
-      .setScale(scale, BigDecimal.RoundingMode.HALF_UP)
-      .underlying.unscaledValue.longValueExact
-    val (muQ, kQ, hQ) = (fp(target), fp(slack), fp(threshold))
-    val xq = (col(x).cast(s"decimal(18,$scale)") * unit).cast("long")
-    val e = struct(seq.map(col) :+ xq.as("__xq"): _*)
-    val b = batch.filter(col(x).isNotNull)
-      .select(col(group), e.as("__e"))
-      .groupBy(col(group))
-      .agg(sort_array(collect_list(col("__e"))).as("__es"))
-      .select(col(group), transform(col("__es"), v => v.getField("__xq")).as("__xs"))
-    // one fold per direction: acc = (p, minp, smax); the deviation sign
-    // is the only difference, so both run the same step shape
-    def stepFold(xs: org.apache.spark.sql.Column, init: org.apache.spark.sql.Column,
-                 dev: (org.apache.spark.sql.Column) => org.apache.spark.sql.Column) =
-      aggregate(xs, init, (acc, v) => {
-        val p = acc.getField("p") + dev(v)
-        val m = least(acc.getField("m"), p)
-        struct(p.as("p"), m.as("m"),
-          greatest(acc.getField("s"), p - least(lit(0L), m)).as("s"))
-      })
-    val zero = struct(lit(0L).as("p"), lit(0L).as("m"), lit(0L).as("s"))
-    val stateCols = Seq("n_obs", "p_pos", "min_pos", "smax_pos",
-      "p_neg", "min_neg", "smax_neg")
-    val merged = (
-      if (stateExists(spark, stateDir))
-        b.join(spark.read.parquet(stateDir).drop("alarm"), Seq(group), "full")
-      else stateCols.foldLeft(b)((d, c) =>
-        d.withColumn(c, lit(null).cast("long")))
-    ).select(col(group),
-      (coalesce(col("n_obs"), lit(0L)) +
-        coalesce(size(col("__xs")), lit(0)).cast("long")).as("n_obs"),
-      when(col("__xs").isNull, // key silent this batch: state rides through
-        struct(col("p_pos").as("p"), col("min_pos").as("m"), col("smax_pos").as("s")))
-        .otherwise(stepFold(col("__xs"),
-          when(col("p_pos").isNull, zero)
-            .otherwise(struct(col("p_pos").as("p"), col("min_pos").as("m"),
-              col("smax_pos").as("s"))),
-          v => v - lit(muQ) - lit(kQ))).as("__up"),
-      when(col("__xs").isNull,
-        struct(col("p_neg").as("p"), col("min_neg").as("m"), col("smax_neg").as("s")))
-        .otherwise(stepFold(col("__xs"),
-          when(col("p_neg").isNull, zero)
-            .otherwise(struct(col("p_neg").as("p"), col("min_neg").as("m"),
-              col("smax_neg").as("s"))),
-          v => lit(muQ) - v - lit(kQ))).as("__dn"))
-      .select(col(group), col("n_obs"),
-        col("__up.p").as("p_pos"), col("__up.m").as("min_pos"),
-        col("__up.s").as("smax_pos"),
-        col("__dn.p").as("p_neg"), col("__dn.m").as("min_neg"),
-        col("__dn.s").as("smax_neg"))
-      .withColumn("alarm",
-        col("smax_pos") > lit(hQ) || col("smax_neg") > lit(hQ))
-    merged.write.mode("overwrite").parquet(state.next)
-    state.publish(batchId)
+    StateDir.applyBatch(batch.sparkSession, stateDir, "cusumSink", Some(batchId)) { live =>
+      val fp = graft.operators.Profiler.fixedPoint(_: Double, scale)
+      val (muQ, kQ, hQ) = (fp(target), fp(slack), fp(threshold))
+      val b = graft.operators.Profiler.fixedPointSeries(batch, group, seq, x, scale)
+      // one fold per direction: acc = (p, minp, smax); the deviation sign
+      // is the only difference, so both run the same step shape
+      def stepFold(xs: org.apache.spark.sql.Column, init: org.apache.spark.sql.Column,
+                   dev: (org.apache.spark.sql.Column) => org.apache.spark.sql.Column) =
+        aggregate(xs, init, (acc, v) => {
+          val p = acc.getField("p") + dev(v)
+          val m = least(acc.getField("m"), p)
+          struct(p.as("p"), m.as("m"),
+            greatest(acc.getField("s"), p - least(lit(0L), m)).as("s"))
+        })
+      val zero = struct(lit(0L).as("p"), lit(0L).as("m"), lit(0L).as("s"))
+      val stateCols = Seq("n_obs", "p_pos", "min_pos", "smax_pos",
+        "p_neg", "min_neg", "smax_neg")
+      live.fold(stateCols.foldLeft(b)((d, c) => d.withColumn(c, lit(null).cast("long"))))(s =>
+        b.join(s.drop("alarm"), Seq(group), "full")
+      ).select(col(group),
+        (coalesce(col("n_obs"), lit(0L)) +
+          coalesce(size(col("__xs")), lit(0)).cast("long")).as("n_obs"),
+        when(col("__xs").isNull, // key silent this batch: state rides through
+          struct(col("p_pos").as("p"), col("min_pos").as("m"), col("smax_pos").as("s")))
+          .otherwise(stepFold(col("__xs"),
+            when(col("p_pos").isNull, zero)
+              .otherwise(struct(col("p_pos").as("p"), col("min_pos").as("m"),
+                col("smax_pos").as("s"))),
+            v => v - lit(muQ) - lit(kQ))).as("__up"),
+        when(col("__xs").isNull,
+          struct(col("p_neg").as("p"), col("min_neg").as("m"), col("smax_neg").as("s")))
+          .otherwise(stepFold(col("__xs"),
+            when(col("p_neg").isNull, zero)
+              .otherwise(struct(col("p_neg").as("p"), col("min_neg").as("m"),
+                col("smax_neg").as("s"))),
+            v => lit(muQ) - v - lit(kQ))).as("__dn"))
+        .select(col(group), col("n_obs"),
+          col("__up.p").as("p_pos"), col("__up.m").as("min_pos"),
+          col("__up.s").as("smax_pos"),
+          col("__dn.p").as("p_neg"), col("__dn.m").as("min_neg"),
+          col("__dn.s").as("smax_neg"))
+        .withColumn("alarm",
+          col("smax_pos") > lit(hQ) || col("smax_neg") > lit(hQ))
+    }
   }
 
   /** STREAMING DISTRIBUTION-DRIFT MONITOR (PSI) — the model-ops staple
@@ -1133,7 +1047,7 @@ object Streaming {
     val nRows = batch.count()
     val nVals = bins.agg(coalesce(sum(col("n_b")), lit(0L))).head().getLong(0)
     val next = state.next
-    if (!stateExists(spark, stateDir)) {
+    if (!state.hasState) {
       // first applied batch FREEZES the reference — so an empty micro-batch
       // (foreachBatch does deliver them, e.g. at stream start before data
       // arrives) must NOT freeze: an all-null/empty reference would score
@@ -1202,7 +1116,7 @@ object Streaming {
     val clean = batch.filter(col(vecCol).isNotNull)
     val nRows = clean.count()
     val next = state.next
-    if (!stateExists(spark, stateDir)) {
+    if (!state.hasState) {
       // freeze on the first batch that can seed k clusters — an empty or
       // sub-k batch must NOT freeze a degenerate reference (the
       // psiDriftSink empty-first-batch rule)

@@ -753,6 +753,7 @@ class StreamingSpec extends AnyFunSuite {
     val cusum = ((1 to 4).map(i => (1L, i.toLong, 0.0)) ++
       (5 to 8).map(i => (1L, i.toLong, 10.0))).toDF("g", "i", "x")
     def emb(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
+    def vals(xs: Long*) = xs.toDF("v")
     // (sink over a state dir, its three batches, the tables of its state)
     val cases: Seq[(String => (org.apache.spark.sql.DataFrame, Long) => Unit,
       Seq[org.apache.spark.sql.DataFrame], Seq[String])] = Seq(
@@ -766,7 +767,13 @@ class StreamingSpec extends AnyFunSuite {
             (2L, Seq(1.0, 0.0, 0.0, 0.0)), (3L, Seq(0.0, 1.0, 0.0, 0.0))),
           emb((10L, Seq(1.0, 0.0, 0.4, 0.0))),
           emb((11L, Seq(0.0, 1.0, 0.0, 0.0)), (12L, Seq(0.0, 1.0, 0.0, 0.0)))),
-        Seq("/centroids", "/hist", "/ledger")))
+        Seq("/centroids", "/hist", "/ledger")),
+      (d => Streaming.ewmaSink("g", Seq("i"), "x", 1, 0, d) _,
+        Seq(cusum.filter($"i" <= 3), cusum.filter($"i".between(4, 6)),
+          cusum.filter($"i" > 6)), Seq("")),
+      (d => Streaming.psiDriftSink("v", 10L, d) _,
+        Seq(vals(1, 2, 3, 11, 12), vals(1, 21, 22), vals(2, 3, 31)),
+        Seq("/ref", "/ledger")))
     for (((sinkAt, bs, tables), c) <- cases.zipWithIndex) {
       val Seq(ref, merged, crashA, crashB) =
         Seq("ref", "merged", "a", "b").map(w => s"$base/$c/$w")
