@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** C4-style blocklist gating: which blocklisted terms does each document
@@ -13,13 +13,6 @@ import org.apache.spark.sql.functions._
   * and text the same way.)
   */
 object Blocklist {
-
-  /** Sorted-distinct matched patterns for `text` (case-sensitive;
-    * pre-fold case yourself — [[audit]] lowercases both sides). */
-  def matchesCol(text: Column, patterns: Seq[String]): Column = {
-    graft.plans.GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
-    call_function("ac_matches", text, typedlit(patterns))
-  }
 
   /** Per-document blocklist audit: `(id, hits, n_hits, blocked)` where
     * `hits` is the lexicographically-sorted distinct matched terms.

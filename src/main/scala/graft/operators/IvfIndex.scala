@@ -91,42 +91,42 @@ object IvfIndex {
     * assignments stay centroid-consistent, only cell balance drifts) and
     * appended to the cell-partitioned corpus, so every probe immediately
     * sees them through the same partition-pruned layout. Ids already in
-    * the corpus are dropped first (the S6 insert-if-absent gate), which
-    * makes a replayed micro-batch a no-op — at-least-once delivery
-    * degrades to exactly-once, same discipline as the near-dup sink.
+    * the corpus are dropped first by the S6 step
+    * ([[Ops.insertIfAbsent]]), which makes a replayed micro-batch a
+    * no-op — at-least-once delivery degrades to exactly-once, same
+    * discipline as the near-dup sink.
     *
     * Appended ids are also recorded in an `appended/` sidecar (the corpus
     * schema stays byte-identical to [[build]]'s, so every existing probe
     * and the q_ann_ivf_topk gate are untouched); [[maintenanceAudit]]
-    * reads it for the staleness/recall row. The sidecar append follows
-    * the corpus append, so a crash between the two undercounts staleness
-    * — the audit is advisory, never load-bearing for correctness. Both
-    * appends execute the same deterministic anti-joined plan.
-    *
-    * Returns the number of vectors appended. */
+    * reads it for the staleness/recall row (see [[appendAbsent]]). */
   def appendBatch(batch: DataFrame, id: String, vec: String,
-                  indexDir: String): Long = {
-    val spark = batch.sparkSession
-    val centRows = spark.read.parquet(s"$indexDir/centroids")
+                  indexDir: String): Unit = {
+    val centRows = batch.sparkSession.read.parquet(s"$indexDir/centroids")
       .orderBy(col("cell")).collect()
     require(centRows.nonEmpty,
       s"IvfIndex.appendBatch: no centroid table under $indexDir — build() first")
     val centroids = centRows.map(_.getSeq[Double](1).toArray)
-    val corpusDir = s"$indexDir/corpus"
-    // deterministic intra-batch survivor (the insertIfAbsentSink rule),
-    // then the replay gate against the corpus ids
-    val tiebreak = batch.columns.filterNot(_ == id).toSeq match {
-      case Nil => Seq(col(id))
-      case rest => rest.map(col)
-    }
-    val fresh = graft.operators.Ops
-      .dedupFirstWins(batch, Seq(id), tiebreak)
-      .join(spark.read.parquet(corpusDir).select(col(id)), Seq(id), "left_anti")
-      .withColumn("cell", cellOf(col(vec), centroids))
-    fresh.write.mode("append").partitionBy("cell").parquet(corpusDir)
-    val appendedIds = fresh.select(col(id))
-    appendedIds.write.mode("append").parquet(s"$indexDir/appended")
-    spark.read.parquet(s"$indexDir/appended").count() // total, for callers
+    appendAbsent(batch, id, indexDir, "corpus")(
+      _.withColumn("cell", cellOf(col(vec), centroids)))
+  }
+
+  /** The append of both maintained indexes ([[PqIndex.appendBatch]] too):
+    * the batch's absent rows ([[Ops.insertIfAbsent]] against `store`) get
+    * their `cell` from the frozen `assign` and are appended to `store`
+    * partitioned by cell, their ids to the `appended` sidecar. The sidecar
+    * append comes second, so a crash between the two undercounts
+    * staleness — the audit is advisory, never load-bearing. Both appends
+    * run the same anti-joined plan (its file listing is fixed when the
+    * plan is built). */
+  private[operators] def appendAbsent(batch: DataFrame, id: String,
+                                      indexDir: String, store: String)
+                                     (assign: DataFrame => DataFrame): Unit = {
+    val storeDir = s"$indexDir/$store"
+    val fresh = assign(Ops.insertIfAbsent(batch, id,
+      Some(batch.sparkSession.read.parquet(storeDir))))
+    fresh.write.mode("append").partitionBy("cell").parquet(storeDir)
+    fresh.select(col(id)).write.mode("append").parquet(s"$indexDir/appended")
   }
 
   /** Staleness / recall audit of a maintained index — the maintenance
@@ -143,31 +143,40 @@ object IvfIndex {
                        anchors: Int = 8): DataFrame = {
     import spark.implicits._
     val corpus = spark.read.parquet(s"$indexDir/corpus")
-    val nTotal = corpus.count()
-    val appendedDir = s"$indexDir/appended"
-    val hasAppended = new org.apache.hadoop.fs.Path(appendedDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(appendedDir))
-    val appended = if (hasAppended) spark.read.parquet(appendedDir) else null
-    val nApp = if (hasAppended) appended.count() else 0L
-    val recall: Option[Double] = if (nApp == 0L) None else {
-      val ids = appended.orderBy(col(id)).limit(anchors)
-        .collect().map(_.getLong(0))
-      val hits = ids.map { a =>
-        val probe = topK(spark, indexDir, id, vec, a, k, nprobe)
-          .select(col(id)).as[Long].collect().toSet
-        val exact = Similarity.scoreTopK(corpus.drop("cell"),
+    auditRow(spark, indexDir, id, corpus.count(), anchors) { a =>
+      (topK(spark, indexDir, id, vec, a, k, nprobe).select(col(id)).as[Long].collect().toSet,
+        Similarity.scoreTopK(corpus.drop("cell"),
             corpus.filter(col(id) === a).select(col(vec).as("q_vec")),
             id, vec, a, k)
-          .select(col(id)).as[Long].collect().toSet
+          .select(col(id)).as[Long].collect().toSet)
+    }
+  }
+
+  /** The audit row of both maintained indexes: `(n_total, n_appended,
+    * staleness_frac, recall_at_k)`, fractions rounded to 6 decimals.
+    * `recall_at_k` averages |probe ∩ exact| / |exact| over the `anchors`
+    * lowest appended ids (an empty exact set scores 1.0; null when none
+    * are appended); `probeExact` gives one anchor's two id sets. */
+  private[operators] def auditRow(spark: SparkSession, indexDir: String,
+                                  id: String, nTotal: Long, anchors: Int)
+                                 (probeExact: Long => (Set[Long], Set[Long])): DataFrame = {
+    import spark.implicits._
+    val appendedDir = s"$indexDir/appended"
+    val path = new org.apache.hadoop.fs.Path(appendedDir)
+    val appended =
+      if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+        Some(spark.read.parquet(appendedDir)) else None
+    val nApp = appended.fold(0L)(_.count())
+    val recall = if (nApp == 0L) None else appended.map { app =>
+      val hits = app.orderBy(col(id)).limit(anchors).collect().map { r =>
+        val (probe, exact) = probeExact(r.getLong(0))
         if (exact.isEmpty) 1.0
         else probe.intersect(exact).size.toDouble / exact.size
       }
-      Some(hits.sum / hits.length)
+      hits.sum / hits.length
     }
-    Seq((nTotal, nApp,
-        math.rint(1e6 * nApp.toDouble / nTotal) / 1e6,
-        recall.map(r => math.rint(1e6 * r) / 1e6)))
+    def r6(x: Double): Double = math.rint(1e6 * x) / 1e6
+    Seq((nTotal, nApp, r6(nApp.toDouble / nTotal), recall.map(r6)))
       .toDF("n_total", "n_appended", "staleness_frac", "recall_at_k")
   }
 

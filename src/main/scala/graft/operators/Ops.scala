@@ -66,6 +66,23 @@ object Ops {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** S6 — the insert-if-absent step (consumer1.py:123-133): the rows of
+    * `batch` to append to a store keyed by `key`. One survivor per key,
+    * the first row by all other columns in order (by the key itself when
+    * there are none) — a total order, so a replayed batch picks the same
+    * row — then a left-anti join drops the keys already in `stored`
+    * (None: no state yet). Appending the result makes at-least-once
+    * delivery exactly-once, first write wins. */
+  def insertIfAbsent(batch: DataFrame, key: String,
+                     stored: Option[DataFrame]): DataFrame = {
+    val tiebreak = batch.columns.filterNot(_ == key).toSeq match {
+      case Nil => Seq(col(key))
+      case rest => rest.map(col)
+    }
+    val deduped = dedupFirstWins(batch, Seq(key), tiebreak)
+    stored.fold(deduped)(s => deduped.join(s.select(col(key)), Seq(key), "left_anti"))
+  }
+
   /** T1/T2 — top-k with deterministic tie-break; Catalyst plans
     * TakeOrderedAndProject (per-partition heap, no full sort/shuffle). */
   def topK(df: DataFrame, k: Int, order: Seq[Column]): DataFrame =

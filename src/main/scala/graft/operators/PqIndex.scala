@@ -208,16 +208,12 @@ object PqIndex {
     * cell and encoded with the FROZEN per-subspace codebooks (codebooks
     * only change at rebuild), then appended to the cell-partitioned codes
     * layout, so probes see fresh vectors immediately through the same
-    * partition pruning. Replay-safe: deterministic intra-batch survivor
-    * (the insertIfAbsentSink rule) then a left-anti gate against the
-    * stored code ids — re-delivered batches append nothing. The appended
-    * ids also land in an `appended` sidecar for [[maintenanceAudit]];
-    * the sidecar append follows the codes append, so a crash between the
-    * two undercounts staleness — advisory, never load-bearing.
-    *
-    * Returns the total appended-vector count. */
+    * partition pruning. Replay-safe by the S6 step
+    * ([[Ops.insertIfAbsent]]) against the stored code ids — re-delivered
+    * batches append nothing. The appended ids also land in an `appended`
+    * sidecar for [[maintenanceAudit]] (see [[IvfIndex.appendAbsent]]). */
   def appendBatch(batch: DataFrame, id: String, vec: String,
-                  indexDir: String): Long = {
+                  indexDir: String): Unit = {
     val spark = batch.sparkSession
     val cb = loadCodebooks(spark, indexDir)
     val coarseRows = spark.read.parquet(s"$indexDir/coarse")
@@ -225,18 +221,8 @@ object PqIndex {
     require(coarseRows.nonEmpty,
       s"PqIndex.appendBatch: no coarse table under $indexDir — build() first")
     val coarse = coarseRows.map(_.getSeq[Double](1).toArray)
-    val codesDir = s"$indexDir/codes"
-    val tiebreak = batch.columns.filterNot(_ == id).toSeq match {
-      case Nil => Seq(col(id))
-      case rest => rest.map(col)
-    }
-    val fresh = graft.operators.Ops
-      .dedupFirstWins(batch, Seq(id), tiebreak)
-      .join(spark.read.parquet(codesDir).select(col(id)), Seq(id), "left_anti")
-    val freshCodes = encodeWithCell(fresh, id, vec, cb, coarse)
-    freshCodes.write.mode("append").partitionBy("cell").parquet(codesDir)
-    freshCodes.select(col(id)).write.mode("append").parquet(s"$indexDir/appended")
-    spark.read.parquet(s"$indexDir/appended").count() // total, for callers
+    IvfIndex.appendAbsent(batch, id, indexDir, "codes")(
+      encodeWithCell(_, id, vec, cb, coarse))
   }
 
   /** Staleness / ADC-recall audit of a maintained compressed index — the
@@ -256,35 +242,17 @@ object PqIndex {
                        anchors: Int = 8): DataFrame = {
     import spark.implicits._
     val codes = spark.read.parquet(s"$indexDir/codes")
-    val nTotal = codes.count()
-    val appendedDir = s"$indexDir/appended"
-    val hasAppended = new org.apache.hadoop.fs.Path(appendedDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(appendedDir))
-    val nApp = if (hasAppended) spark.read.parquet(appendedDir).count() else 0L
-    val recall: Option[Double] = if (nApp == 0L) None else {
-      val ids = spark.read.parquet(appendedDir).orderBy(col(id))
-        .limit(anchors).collect().map(_.getLong(0))
-      val corpus = emb.join(codes.select(col(id)), Seq(id), "left_semi")
-      val hits = ids.map { a =>
-        val anchor = emb.filter(col(id) === a)
-          .select(col(vec).cast("array<double>")).head().getSeq[Double](0).toArray
-        val probe = topKReranked(spark, indexDir, emb, id, vec, anchor, a,
-            k, shortlist, nprobe)
-          .select(col(id)).as[Long].collect().toSet
-        val exact = Similarity.scoreTopK(corpus,
+    val corpus = emb.join(codes.select(col(id)), Seq(id), "left_semi")
+    IvfIndex.auditRow(spark, indexDir, id, codes.count(), anchors) { a =>
+      val anchor = emb.filter(col(id) === a)
+        .select(col(vec).cast("array<double>")).head().getSeq[Double](0).toArray
+      (topKReranked(spark, indexDir, emb, id, vec, anchor, a, k, shortlist, nprobe)
+          .select(col(id)).as[Long].collect().toSet,
+        Similarity.scoreTopK(corpus,
             corpus.filter(col(id) === a).select(col(vec).as("q_vec")),
             id, vec, a, k)
-          .select(col(id)).as[Long].collect().toSet
-        if (exact.isEmpty) 1.0
-        else probe.intersect(exact).size.toDouble / exact.size
-      }
-      Some(hits.sum / hits.length)
+          .select(col(id)).as[Long].collect().toSet)
     }
-    Seq((nTotal, nApp,
-        math.rint(1e6 * nApp.toDouble / nTotal) / 1e6,
-        recall.map(r => math.rint(1e6 * r) / 1e6)))
-      .toDF("n_total", "n_appended", "staleness_frac", "recall_at_k")
   }
 
   /** Read the published codebooks back (bounded metadata: m×k rows). */

@@ -56,9 +56,10 @@ object Scale {
     * corpus — typically under [[memo]] keyed by the corpus fingerprint —
     * and pass it to [[candidateVolumeGuard]] / [[bandVolumeGuard]] so twin
     * queries and steady-state re-runs share one count scan instead of
-    * re-counting the corpus per guarded stage. */
+    * re-counting the corpus per guarded stage. The guards broadcast it at
+    * their join; callers that only read the count (`head()`) see no hint. */
   def baseCountFrame(corpus: DataFrame): DataFrame =
-    broadcast(corpus.agg(count(lit(1)).as("__base")).localCheckpoint())
+    corpus.agg(count(lit(1)).as("__base")).localCheckpoint()
 
   /** Salted equi-join for skewed fact keys: fact rows get a random salt in
     * [0, salts), the dim side is exploded ×salts, and the join key becomes
@@ -215,7 +216,7 @@ object Scale {
     // when left lazy — the broadcast subtrees are NOT exchange-reused
     // across consumer plans)
     val stats = broadcast(cand.agg(count(lit(1)).as("__cand"))
-      .crossJoin(baseCount.getOrElse(corpus.agg(count(lit(1)).as("__base"))))
+      .crossJoin(baseCount.fold(corpus.agg(count(lit(1)).as("__base")))(broadcast))
       .localCheckpoint())
     cand.crossJoin(stats)
       .filter(when(col("__cand").cast("double") <=
@@ -254,7 +255,7 @@ object Scale {
       .agg(coalesce(sum(col("__m").cast("double") * (col("__m") - 1).cast("double") / 2),
         lit(0.0)).as("__slots"))
     val stats = broadcast(slots
-      .crossJoin(baseCount.getOrElse(corpus.agg(count(lit(1)).as("__base"))))
+      .crossJoin(baseCount.fold(corpus.agg(count(lit(1)).as("__base")))(broadcast))
       .localCheckpoint())
     banded.crossJoin(stats)
       .filter(when(col("__slots") <=
@@ -285,11 +286,6 @@ object Scale {
     */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Advisory repartition before a wide write so output files are ~target
-    * size instead of one file per (possibly tiny) task. */
-  def compactTo(df: DataFrame, targetPartitions: Int): DataFrame =
-    df.repartition(targetPartitions)
 
   /** Small-file compaction of an existing parquet directory — the lake
     * maintenance job every streaming sink eventually needs (a micro-batch

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -173,47 +175,6 @@ object Streaming {
   private[graft] def dropNearDupMirror(stateDir: String): Unit =
     nearDupTallies.remove(stateDir): Unit
 
-  /** Batch-query observed-metrics capture: [[incrementalNearDupSink]]
-    * reads its per-batch row counts from `Dataset.observe` nodes embedded
-    * in the two write jobs instead of running separate count jobs — at
-    * micro-batch sizes the sink's cost is JOB LAUNCHES, not rows. The
-    * listener bus delivers metrics asynchronously, so each expected
-    * observation gets a latch; a lost metric (timeout) falls back to an
-    * explicit count job rather than wedging the sink. */
-  private final class NdObsListener
-      extends org.apache.spark.sql.util.QueryExecutionListener {
-    private val metrics = new java.util.concurrent.ConcurrentHashMap[String, Row]()
-    private val latches =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CountDownLatch]()
-    def expect(name: String): Unit =
-      latches.put(name, new java.util.concurrent.CountDownLatch(1)): Unit
-    def await(name: String, ms: Long): Option[Row] = {
-      val l = latches.get(name)
-      if (l != null) l.await(ms, java.util.concurrent.TimeUnit.MILLISECONDS): Unit
-      latches.remove(name): Unit
-      Option(metrics.remove(name))
-    }
-    private def drain(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-      qe.observedMetrics.foreach { case (k, row) =>
-        metrics.put(k, row)
-        val l = latches.remove(k); if (l != null) l.countDown()
-      }
-    override def onSuccess(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-      drain(qe)
-    override def onFailure(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
-      drain(qe)
-  }
-  private val ndListeners =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, NdObsListener]()
-  private def ndListener(spark: SparkSession): NdObsListener =
-    ndListeners.computeIfAbsent(spark, s => {
-      val l = new NdObsListener
-      s.listenerManager.register(l)
-      l
-    })
-
   /** Incremental NEAR-DUP detection sink — MinHash+LSH dedup as a
     * STREAMING property: each micro-batch's documents are checked against
     * everything ingested so far, without ever re-pairing the history
@@ -250,7 +211,9 @@ object Streaming {
     *     and the append to `pairs`.
     *
     * Row counts the gate needs (new docs, admitted candidates) ride on
-    * `Dataset.observe` nodes inside those jobs ([[NdObsListener]]) — no
+    * `Dataset.observe` nodes inside those jobs, each read through an
+    * [[org.apache.spark.sql.Observation]] awaited for at most 10 s (a lost
+    * metric falls back to a count job rather than wedging the sink) — no
     * separate count jobs. COMMIT is then a metadata move of the staged
     * part files into `sigs`, each through the checked [[StateDir.rename]].
     * This sink keeps its own commit instead of [[StateDir.publish]]
@@ -327,7 +290,10 @@ object Streaming {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try act finally spark.conf.set("spark.sql.adaptive.enabled", was)
       }
-    val obs = ndListener(spark)
+    // an observed count, or the count job `fallback` if it never arrives
+    def observed(o: Observation)(fallback: => Long): Long =
+      try Await.result(o.future, 10.seconds).getLong(0)
+      catch { case _: java.util.concurrent.TimeoutException => fallback }
     val (sigsDir, pairsDir) = (s"$stateDir/sigs", s"$stateDir/pairs")
     val stagingRoot = s"$stateDir/.staging"
     val fs = new org.apache.hadoop.fs.Path(stateDir)
@@ -388,8 +354,7 @@ object Streaming {
       // never bands (it still occupies a sigs row — the replay gate must
       // remember it).
       val staged = s"$stagingRoot/sigs_b$batchId"
-      val obsNew = s"graft_nd_new_${java.util.UUID.randomUUID}"
-      obs.expect(obsNew)
+      val obsNew = Observation(s"graft_nd_new_${java.util.UUID.randomUUID}")
       // the stage plan precedes this batch's count, so its profile is
       // guessed from the PREVIOUS batch's size; under the small profile
       // the anti-join is a shuffle-hash join (anti joins only support
@@ -418,8 +383,7 @@ object Streaming {
           .observe(obsNew, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(staged)
       }
-      val nNew = obs.await(obsNew, 10000).map(_.getLong(0))
-        .getOrElse(spark.read.parquet(staged).count())
+      val nNew = observed(obsNew)(spark.read.parquet(staged).count())
       if (nNew == 0L) {
         fs.delete(new org.apache.hadoop.fs.Path(staged), true): Unit
         nearDupTallies.put(stateDir,
@@ -525,8 +489,7 @@ object Streaming {
                 "None"))).cast("boolean")))
           .select(col(idCol), col("band_key"))
       }
-      val obsCand = s"graft_nd_cand_${java.util.UUID.randomUUID}"
-      obs.expect(obsCand)
+      val obsCand = Observation(s"graft_nd_cand_${java.util.UUID.randomUUID}")
       // probe side vs index: the probe is bounded by the batch where the
       // index is unbounded at 100 TB, so the probe is the natural build
       // side. Large batches leave the choice to AQE (which sees the
@@ -605,9 +568,7 @@ object Streaming {
         (if (small) freshPairs.repartition(1) else freshPairs)
           .write.mode("append").parquet(pairsDir)
       }
-      val cumCand = st.cumCand +
-        obs.await(obsCand, 10000).map(_.getLong(0))
-          .getOrElse(cand.distinct().count())
+      val cumCand = st.cumCand + observed(obsCand)(cand.distinct().count())
       maxCandidatesPerDoc.foreach { f =>
         if (cumCand > f * nDocs) throw new IllegalStateException(
           s"incrementalNearDupSink: the exact post-join candidate volume " +
@@ -643,7 +604,7 @@ object Streaming {
     * recall row a maintenance schedule keys rebuilds on. */
   def ivfAppendSink(idCol: String, vecCol: String, indexDir: String)
                    (batch: DataFrame, batchId: Long): Unit = {
-    graft.operators.IvfIndex.appendBatch(batch, idCol, vecCol, indexDir): Unit
+    graft.operators.IvfIndex.appendBatch(batch, idCol, vecCol, indexDir)
   }
 
   /** STREAMING COMPRESSED-INDEX MAINTENANCE — [[ivfAppendSink]]'s twin
@@ -656,13 +617,12 @@ object Streaming {
     * rebuild schedule keys on. */
   def pqAppendSink(idCol: String, vecCol: String, indexDir: String)
                   (batch: DataFrame, batchId: Long): Unit = {
-    graft.operators.PqIndex.appendBatch(batch, idCol, vecCol, indexDir): Unit
+    graft.operators.PqIndex.appendBatch(batch, idCol, vecCol, indexDir)
   }
 
-  /** S6 insert-if-absent sink (consumer1.py:123-133) as a foreachBatch
-    * upsert into a parquet-backed state dir: left-anti join against existing
-    * keys, append only new ids — idempotent, so at-least-once replay
-    * degrades to exactly-once (first-write-wins, A8).
+  /** S6 insert-if-absent sink as a foreachBatch append to a parquet-backed
+    * state dir: [[graft.operators.Ops.insertIfAbsent]]'s rows are appended,
+    * so at-least-once replay degrades to exactly-once.
     *
     * At scale the state table would be a transactional table format keyed
     * by `_id`; the anti-join-then-append shape is identical.
@@ -670,20 +630,12 @@ object Streaming {
   def insertIfAbsentSink(keyCol: String, stateDir: String)
                         (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    // deterministic intra-batch survivor: total order over the remaining cols
-    val tiebreak = batch.columns.filterNot(_ == keyCol) match {
-      case Array() => Seq(col(keyCol))
-      case rest => rest.toSeq.map(col)
-    }
-    val deduped = graft.operators.Ops.dedupFirstWins(batch, Seq(keyCol), tiebreak)
     // only "no state yet" skips the anti-join, the StateDir.applyBatch rule:
     // a swallowed failure here would append duplicates (exactly-once lost)
-    val fresh =
-      if (StateDir.hasState(spark, stateDir))
-        deduped.join(spark.read.parquet(stateDir).select(col(keyCol)),
-          Seq(keyCol), "left_anti")
-      else deduped
-    fresh.write.mode("append").parquet(stateDir)
+    val stored =
+      if (StateDir.hasState(spark, stateDir)) Some(spark.read.parquet(stateDir)) else None
+    graft.operators.Ops.insertIfAbsent(batch, keyCol, stored)
+      .write.mode("append").parquet(stateDir)
   }
 
   /** Wire a streaming DataFrame into the insert-if-absent sink with
