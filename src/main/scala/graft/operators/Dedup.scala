@@ -427,22 +427,14 @@ object Dedup {
   }
 
   /** LSH banding: split the signature into `bands` bands of `rows` values;
-    * docs sharing any band key become a candidate pair. Keys are
+    * docs sharing any band key become a candidate pair (deduped). Keys are
     * "band:index-prefixed" strings so bands never collide across indexes.
     * A NULL signature (shingle-less doc from the [[graft.plans.MinHashSig]]
     * path) yields a NULL band array and the row drops out at the explode —
     * the `when` guard also keeps the generator child non-attribute (see
     * [[shingles]] on the generate-inference trap). */
   def lshCandidatePairs(sig: DataFrame, id: String, bands: Int, rows: Int): DataFrame =
-    bandedSelfJoin(bandKeys(sig, id, bands, rows), id)
-
-  /** The band-key self-join shared by every banded candidate generator:
-    * docs sharing any band key pair up, deduped. */
-  private def bandedSelfJoin(banded: DataFrame, id: String): DataFrame =
-    banded.select(col(id).as("doc_a"), col("band_key"))
-      .join(banded.select(col(id).as("doc_b"), col("band_key")), "band_key")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    Scale.bandSelfJoin(bandKeys(sig, id, bands, rows), id, "band_key", "doc_a", "doc_b")
 
   /** MinHash+LSH near-dup pairs with exact verification: candidates from
     * banding, then true Jaccard via a candidate-restricted shingle join —
@@ -490,7 +482,7 @@ object Dedup {
               x => x.cast("string"))))))).as("band_key"))
 
   /** Scan-stage MinHash signatures of a documents frame (shingle array +
-    * [[graft.plans.MinHashSig]], no filter — see [[nearDupPairs]] on why
+    * [[graft.plans.MinHashSig]], no filter — see [[lshNearDups]] on why
     * NULL signatures are left to die at the banding explode). */
   private[graft] def scanSignatures(docs: DataFrame, id: String, text: String,
                                     n: Int, numHashes: Int): DataFrame =
@@ -518,16 +510,9 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** MinHash+LSH near-dup pairs straight from the documents frame — the
-    * preferred entry point: shingle arrays and signatures are both
-    * scan-stage ([[shingleArray]] + [[graft.plans.MinHashSig]]), so the
-    * ONLY shuffles are the band join and the candidate-restricted verify.
-    * The column-pipeline form ([[minhashDupPairs]]) shuffles every shingle
-    * row through a 128-min-aggregate first; this one never materializes a
-    * shingle row outside the candidate set. Same output, same oracle. */
   /** Default candidate-volume cap for the registered MinHash-LSH
-    * production paths: candidates must stay under 32 × |docs| or the plan
-    * raises ([[Scale.candidateVolumeGuard]]). Real near-dup corpora sit
+    * production paths: candidates must stay under 32 × |docs| or the call
+    * raises ([[Scale.guardedBandCandidates]]). Real near-dup corpora sit
     * ORDERS below this (the testdata measures ~0.05 candidates/doc). The
     * trigger point depends on corpus size, since the cap is a TOTAL
     * volume bound: a single clique of c mutually-duplicate docs fires it
@@ -538,85 +523,25 @@ object Dedup {
     * corpora pass, which is what a purge wants. */
   val DefaultCandidatesPerDoc = 32.0
 
+  /** MinHash+LSH near-dup pairs straight from the documents frame — the
+    * preferred entry point: shingle arrays and signatures are both
+    * scan-stage ([[shingleArray]] + [[graft.plans.MinHashSig]]), so the
+    * ONLY shuffles are the band join and the candidate-restricted verify.
+    * The column-pipeline form ([[minhashDupPairs]]) shuffles every shingle
+    * row through a 128-min-aggregate first; this one never materializes a
+    * shingle row outside the candidate set. Same output, same oracle.
+    *
+    * Candidates come from [[Scale.guardedBandCandidates]]: with the cap on
+    * (the default) an over-cap corpus raises at call time; the banding —
+    * and with `bandedCacheKey` its memo entry — is shared with
+    * [[nearDupPairsSalted]], the group/provenance consumers and a query's
+    * steady-state re-runs. */
   def nearDupPairs(docs: DataFrame, id: String, text: String, n: Int,
                    threshold: Double, bands: Int = 32, rows: Int = 4,
                    maxCandidatesPerDoc: Option[Double] = Some(DefaultCandidatesPerDoc),
-                   bandedCacheKey: Option[String] = None): DataFrame = {
-    val base = maxCandidatesPerDoc.map(_ => ndBaseCount(docs, bandedCacheKey))
-    val banded = bandedLsh(docs, id, text, n, bands, rows,
-      maxCandidatesPerDoc, bandedCacheKey, base)
-    val cand = bandedSelfJoin(banded, id).localCheckpoint()
-    maxCandidatesPerDoc.foreach(f =>
-      auditCandVolume(cand, base.get, f, "nearDupPairs"))
-    verifyCandidates(docs, id, text, n, threshold, cand)
-  }
-
-  /** 1-row corpus-count frame for the volume gates, memoized alongside the
-    * banding when a cache key is given — the salted/unsalted twins and a
-    * query's steady-state re-runs share ONE count scan of the corpus.
-    * Built BEFORE the banding memo is entered: [[Scale.memo]] rides a
-    * ConcurrentHashMap.compute, and a nested memo call from inside another
-    * entry's build can hit the map's recursive-update restriction. */
-  private def ndBaseCount(docs: DataFrame, cacheKey: Option[String]): DataFrame =
-    cacheKey match {
-      case Some(k) => Scale.memo(k + ":basecount", docs.sparkSession)(
-        Scale.baseCountFrame(docs))
-      case None => Scale.baseCountFrame(docs)
-    }
-
-  /** EAGER post-join candidate-volume audit (the exact backstop of the
-    * pre-join band-population gate): the candidate frame is already
-    * materialized when this runs — it feeds the count AND the verify — so
-    * the check is one cheap count job over checkpointed blocks plus a
-    * driver compare, and it throws BEFORE the verify is planned (even for
-    * a caller that never executes the returned plan). This replaced a
-    * per-row in-plan raise_error guard riding a broadcast-stats
-    * checkpoint, whose extra stats job cost ~0.2 s per query at sf0.1 and
-    * proved nothing the eager check doesn't. */
-  private def auditCandVolume(cand: DataFrame, baseCount: DataFrame,
-                              factor: Double, what: String): Unit = {
-    val nCand = cand.count()
-    val nDocs = baseCount.head().getLong(0)
-    if (nCand > factor * nDocs) throw new IllegalStateException(
-      s"$what: candidate volume exceeds $factor x corpus size: $nCand " +
-        s"candidates for $nDocs rows. If this corpus is legitimately " +
-        "duplicate-saturated, raise the cap (e.g. maxCandidatesPerDoc = " +
-        "Some(higher)) or disable it with maxCandidatesPerDoc = None")
-  }
-
-  /** The shared guarded BANDING of the MinHash-LSH pair paths, memoizable
-    * per corpus via `bandedCacheKey` ([[Scale.memo]] — the
-    * ingest-phase-index pattern: banding a static corpus is build-once
-    * work shared by the plain/salted twins, the group/provenance
-    * consumers, and a query's steady-state re-runs; the caller
-    * fingerprints the corpus files into the key so changed data can never
-    * hit a stale entry).
-    *
-    * No isNotNull filter on the signatures: a Filter over the sig
-    * projection would be pushed below it, re-evaluating minhash_sig per
-    * row; shingle-less docs (NULL sig) instead drop out at the banding
-    * explode's when-guard. With the cap on, the PRE-JOIN band-population
-    * gate (Scale.bandVolumeGuard) proves an over-cap volume before the
-    * self-join shuffles a pair row (the post-join count is the exact
-    * backstop), and banded is checkpointed — it feeds the stats pass plus
-    * both join sides, and one materialization of n·bands narrow rows
-    * beats three signature-projection scans. */
-  private def bandedLsh(docs: DataFrame, id: String, text: String, n: Int,
-                        bands: Int, rows: Int, cap: Option[Double],
-                        bandedCacheKey: Option[String],
-                        baseCount: Option[DataFrame]): DataFrame = {
-    def build(): DataFrame = {
-      val sig = scanSignatures(docs, id, text, n, bands * rows)
-      val banded0 = bandKeys(sig, id, bands, rows)
-      cap.fold(banded0)(f =>
-        Scale.bandVolumeGuard(banded0.localCheckpoint(), "band_key", docs, f,
-          bands, "nearDupPairs", baseCount))
-    }
-    bandedCacheKey match {
-      case Some(k) => Scale.memo(k, docs.sparkSession)(build())
-      case None => build()
-    }
-  }
+                   bandedCacheKey: Option[String] = None): DataFrame =
+    lshNearDups(docs, id, text, n, threshold, bands, rows, maxCandidatesPerDoc,
+      bandedCacheKey, None, "nearDupPairs")
 
   /** [[nearDupPairs]] with the HOT-BAND SKEW GUARD on candidate
     * generation ([[Scale.saltedBandSelfJoin]]): a band shared by ≥ hotMin
@@ -632,28 +557,26 @@ object Dedup {
                          threshold: Double, bands: Int = 32, rows: Int = 4,
                          salts: Int = 8, hotMin: Int = 4096,
                          maxCandidatesPerDoc: Option[Double] = Some(DefaultCandidatesPerDoc),
-                         bandedCacheKey: Option[String] = None): DataFrame = {
-    // the banding — and with a cache key, the memo entry — is shared with
-    // [[nearDupPairs]] (identical plan; its gate raise is tagged
-    // "nearDupPairs" accordingly)
-    val base = maxCandidatesPerDoc.map(_ => ndBaseCount(docs, bandedCacheKey))
-    val banded = bandedLsh(docs, id, text, n, bands, rows,
-      maxCandidatesPerDoc, bandedCacheKey, base)
-    val cand = Scale.saltedBandSelfJoin(banded, id, "band_key",
-        "doc_a", "doc_b", salts, hotMin,
-        inputMaterialized = maxCandidatesPerDoc.isDefined)
-      .localCheckpoint()
-    maxCandidatesPerDoc.foreach(f =>
-      auditCandVolume(cand, base.get, f, "nearDupPairsSalted"))
-    verifyCandidates(docs, id, text, n, threshold, cand)
-  }
+                         bandedCacheKey: Option[String] = None): DataFrame =
+    lshNearDups(docs, id, text, n, threshold, bands, rows, maxCandidatesPerDoc,
+      bandedCacheKey, Some((salts, hotMin)), "nearDupPairsSalted")
 
-  /** Shared tail of the LSH paths: restrict the shingle table to candidate
-    * docs, then exact-verify. `cand` must be materialized by the caller
-    * (it feeds the doc-restriction union AND the verify joins). */
-  private def verifyCandidates(docs: DataFrame, id: String, text: String,
-                               n: Int, threshold: Double,
-                               cand: DataFrame): DataFrame = {
+  /** Shared body of the two LSH pair paths: scan-stage banding → guarded
+    * candidates → restrict the shingle table to candidate docs → exact
+    * verify. No isNotNull filter on the signatures: a Filter over the sig
+    * projection would be pushed below it, re-evaluating minhash_sig per
+    * row; shingle-less docs (NULL sig) instead drop out at the banding
+    * explode's when-guard. */
+  private def lshNearDups(docs: DataFrame, id: String, text: String, n: Int,
+                          threshold: Double, bands: Int, rows: Int,
+                          cap: Option[Double], bandedCacheKey: Option[String],
+                          salt: Option[(Int, Int)], what: String): DataFrame = {
+    val guarded = Scale.guardedBandCandidates(docs, id, "doc_a", "doc_b", bands,
+        cap, "maxCandidatesPerDoc", what, salt, bandedCacheKey)(
+        Some(bandKeys(scanSignatures(docs, id, text, n, bands * rows), id, bands, rows))).get
+    // materialized either way: it feeds the doc-restriction union AND the
+    // verify joins (capped, the helper already checkpointed it)
+    val cand = if (cap.isDefined) guarded else guarded.localCheckpoint()
     val candDocs = cand.select(col("doc_a").as(id))
       .union(cand.select(col("doc_b").as(id))).distinct()
     // verify over the exploded form (inline generator child — see shingles)

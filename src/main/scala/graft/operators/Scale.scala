@@ -51,13 +51,12 @@ object Scale {
     }
   }
 
-  /** Materialized 1-row `__base` corpus-count frame for the volume guards.
-    * EAGER (runs the count job at call time); build it once per static
-    * corpus — typically under [[memo]] keyed by the corpus fingerprint —
-    * and pass it to [[candidateVolumeGuard]] / [[bandVolumeGuard]] so twin
-    * queries and steady-state re-runs share one count scan instead of
-    * re-counting the corpus per guarded stage. The guards broadcast it at
-    * their join; callers that only read the count (`head()`) see no hint. */
+  /** Materialized 1-row `__base` corpus-count frame for the volume gates.
+    * EAGER (runs the count job at call time); [[guardedBandCandidates]]
+    * memoizes it per static corpus so twin queries and steady-state re-runs
+    * share one count scan instead of re-counting the corpus per gate. The
+    * pre-join gate broadcasts it at its join; the post-join audit only
+    * reads the count (`head()`) and sees no hint. */
   def baseCountFrame(corpus: DataFrame): DataFrame =
     corpus.agg(count(lit(1)).as("__base")).localCheckpoint()
 
@@ -128,24 +127,18 @@ object Scale {
     * rows with ≥ hotMin-member keys), so replication is bounded by
     * salts × |hot rows|, and |hot keys| ≤ |banded| / hotMin by pigeonhole —
     * which is why the hot-key list is broadcastable at production hotMin.
-    * `banded` is localCheckpoint'ed: it feeds the size count plus both the
-    * hot and cold splits (the minhashDupPairs multi-consumer discipline).
+    * `banded` should be materialized by the caller: it feeds the size count
+    * plus both the hot and cold splits (the minhashDupPairs multi-consumer
+    * discipline), and [[guardedBandCandidates]] hands it over checkpointed.
     *
     * `banded` must carry one row per (idCol, keyCol) membership; output is
     * the distinct (aName < bName) candidate pairs. */
   def saltedBandSelfJoin(banded: DataFrame, idCol: String, keyCol: String,
                          aName: String, bName: String,
-                         salts: Int, hotMin: Int,
-                         inputMaterialized: Boolean = false): DataFrame = {
+                         salts: Int, hotMin: Int): DataFrame = {
     require(salts >= 2 && hotMin >= 2,
       s"need salts >= 2 and hotMin >= 2, got salts=$salts hotMin=$hotMin")
-    // `inputMaterialized = true` skips the internal checkpoint: callers
-    // whose banded frame already sits on a localCheckpoint (e.g. the
-    // bandVolumeGuard chain, a constant-cost filter over materialized
-    // rows) would otherwise pay a second full materialization of the same
-    // data (measured ~+1s on the sf0.1 salted dedup board row).
-    val b0 = banded.select(col(idCol), col(keyCol))
-    val b = if (inputMaterialized) b0 else b0.localCheckpoint()
+    val b = banded.select(col(idCol), col(keyCol))
     // materialized: consumed by FOUR joins (hot/cold × left/right) — left
     // lazy, the count aggregate and its shuffle replay once per consumer
     // (the plan showed 4 identical HashAggregate+Exchange subtrees). The
@@ -186,77 +179,48 @@ object Scale {
     coldPairs.union(hotPairs).distinct()
   }
 
-  /** IN-PLAN CANDIDATE-VOLUME AUDIT for banded/bucketed pair generators:
-    * every row of `cand` is gated on `|cand| <= factor × |corpus|`, and the
-    * plan `raise_error`s — fails the job loudly — the moment a
-    * candidate-generation stage regresses toward all-pairs (a degenerate
-    * LSH band region, a duplicate-saturated corpus, an under-banded
-    * configuration). The LSH scale contract is "linear in n with a
-    * constant"; this makes the contract EXECUTABLE: at 100 TB an
-    * accidental all-hot corpus raises instead of silently running ×100
-    * pair volume (the measured Tier-B blow-up in SCALE_PROBE.md is the
-    * motivation). The counts ride one broadcast-crossJoin'ed single-row
-    * frame, so the per-row guard is a constant comparison; `cand` should
-    * already be materialized by the caller (it feeds the count AND the
-    * downstream verify). Semantics-preserving while silent: when the cap
-    * holds, output ≡ input (the oracle gates stay hash-green).
-    *
-    * `baseCount` (optional) is a precomputed 1-row `__base` corpus-count
-    * frame — pass [[baseCountFrame]]'s (possibly memoized) result so twin
-    * queries over the same static corpus don't re-run the count scan. */
-  def candidateVolumeGuard(cand: DataFrame, corpus: DataFrame,
-                           factor: Double, what: String,
-                           baseCount: Option[DataFrame] = None): DataFrame = {
-    require(factor > 0, s"factor must be positive, got $factor")
-    val outCols = cand.columns
-    // the 1-row stats frame is materialized once: the guarded output is
-    // typically consumed by several downstream joins (doc restriction +
-    // verify), and an un-checkpointed stats subtree would re-run both
-    // count aggregates per consumer (measured: +0.5-0.8 s per LSH query
-    // when left lazy — the broadcast subtrees are NOT exchange-reused
-    // across consumer plans)
-    val stats = broadcast(cand.agg(count(lit(1)).as("__cand"))
-      .crossJoin(baseCount.fold(corpus.agg(count(lit(1)).as("__base")))(broadcast))
-      .localCheckpoint())
-    cand.crossJoin(stats)
-      .filter(when(col("__cand").cast("double") <=
-          lit(factor) * col("__base").cast("double"), lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$what: candidate volume exceeds $factor x corpus size: "),
-          col("__cand").cast("string"), lit(" candidates for "),
-          col("__base").cast("string"), lit(" rows. If this corpus is "),
-          lit("legitimately duplicate-saturated, raise the cap (e.g. "),
-          lit("maxCandidatesPerDoc = Some(higher)) or disable it with "),
-          lit("maxCandidatesPerDoc = None"))).cast("boolean")))
-      .select(outCols.map(col): _*)
-  }
+  /** The plain band self-join: ids sharing any `keyCol` pair up, as the
+    * distinct (aName < bName) pairs. A pair colliding in m bands appears m
+    * times before the distinct, and deduping HERE (before any scoring or
+    * verify) is the measured choice: the distinct's partial aggregate
+    * dedups map-side before the shuffle, while scoring every collision row
+    * and deduping survivors pays a dot + two join probes per duplicate
+    * (4.5 s vs 2.65 s for the lshCosinePairs candidate build at sf0.1).
+    * Distinct-early also holds at corpus scale: the shuffle is O(unique
+    * candidates), the map-side hash O(collisions). */
+  def bandSelfJoin(banded: DataFrame, idCol: String, keyCol: String,
+                   aName: String, bName: String): DataFrame =
+    banded.select(col(idCol).as(aName), col(keyCol))
+      .join(banded.select(col(idCol).as(bName), col(keyCol)), keyCol)
+      .filter(col(aName) < col(bName))
+      .select(col(aName), col(bName)).distinct()
 
   /** PRE-JOIN band-population gate — the upstream half of the candidate
-    * audit. [[candidateVolumeGuard]] counts candidates AFTER the band
-    * self-join, which on a truly all-hot 100 TB corpus means the m²-pair
-    * shuffle has already run (and likely died) before the count can
-    * compare. This guard reads only the BANDED rows (linear): per-band
-    * populations m give Σ m(m−1)/2 pair slots, and since a unique pair
-    * collides in at most `bands` bands, `slots > factor·n·bands` PROVES
+    * audit in [[guardedBandCandidates]]. Counting candidates AFTER the band
+    * self-join on a truly all-hot 100 TB corpus means the m²-pair shuffle
+    * has already run (and likely died) before the count can compare. This
+    * gate reads only the BANDED rows (linear): per-band populations m give
+    * Σ m(m−1)/2 pair slots, and since a unique pair collides in at most
+    * `bands` bands, `slots > factor·n·bands` PROVES
     * `uniqueCandidates > factor·n` — so the raise here is sound (never
-    * fires when the post-join gate wouldn't) and fires on the join's
+    * fires when the post-join audit wouldn't) and fires on the join's
     * INPUT rows, before any pair row exists. It under-fires when
     * collisions are sparse (slots ≈ unique), which is exactly when the
-    * join is survivable and the post-join gate backstops. Callers should
+    * join is survivable and the post-join audit backstops. Callers should
     * pass a materialized `banded` (it feeds this stats pass AND both join
-    * sides). `baseCount` (optional) is a precomputed 1-row `__base`
-    * corpus-count frame (see [[baseCountFrame]]) so twin queries over the
-    * same static corpus share one count scan. */
-  def bandVolumeGuard(banded: DataFrame, keyCol: String, corpus: DataFrame,
+    * sides). `baseCount` is the 1-row `__base` corpus-count frame
+    * ([[baseCountFrame]]); the two 1-row stats are materialized once and
+    * broadcast, so the per-row gate is a constant comparison; `capName`
+    * is the caller's cap parameter, named in the raise. Semantics-preserving
+    * while silent: output ≡ input. */
+  def bandVolumeGuard(banded: DataFrame, keyCol: String, baseCount: DataFrame,
                       factor: Double, bands: Int, what: String,
-                      baseCount: Option[DataFrame] = None): DataFrame = {
+                      capName: String): DataFrame = {
     val outCols = banded.columns
     val slots = banded.groupBy(col(keyCol)).agg(count(lit(1)).as("__m"))
       .agg(coalesce(sum(col("__m").cast("double") * (col("__m") - 1).cast("double") / 2),
         lit(0.0)).as("__slots"))
-    val stats = broadcast(slots
-      .crossJoin(baseCount.fold(corpus.agg(count(lit(1)).as("__base")))(broadcast))
-      .localCheckpoint())
+    val stats = broadcast(slots.crossJoin(broadcast(baseCount)).localCheckpoint())
     banded.crossJoin(stats)
       .filter(when(col("__slots") <=
           lit(factor) * col("__base").cast("double") * lit(bands.toDouble), lit(true))
@@ -264,11 +228,83 @@ object Scale {
           lit(s"$what: projected band candidates exceed $factor x corpus "),
           lit(s"(pre-join bound over $bands bands): "),
           col("__slots").cast("string"), lit(" pair slots for "),
-          col("__base").cast("string"), lit(" rows. If this corpus is "),
-          lit("legitimately duplicate-saturated, raise the cap (e.g. "),
-          lit("maxCandidatesPerDoc = Some(higher)) or disable it with "),
-          lit("maxCandidatesPerDoc = None"))).cast("boolean")))
+          col("__base").cast("string"), lit(" rows. "),
+          lit(raiseHint(capName)))).cast("boolean")))
       .select(outCols.map(col): _*)
+  }
+
+  private def raiseHint(capName: String): String =
+    "If this corpus is legitimately duplicate-saturated, raise the cap " +
+      s"(e.g. $capName = Some(higher)) or disable it with $capName = None"
+
+  /** The GUARDED CANDIDATE STEP of the banded-LSH pair paths
+    * ([[Dedup.nearDupPairs]], [[Dedup.nearDupPairsSalted]],
+    * [[Similarity.lshCosinePairs]]): the distinct (aName < bName) pairs of
+    * `idCol`s sharing a `band_key` of `banding` (one row per membership;
+    * None — nothing to band — passes through as None).
+    *
+    * The LSH scale contract is "candidate volume linear in n with a
+    * constant": a degenerate band region, a duplicate-saturated corpus or
+    * an under-banded configuration would otherwise regress candidate
+    * generation toward all-pairs and still return correct rows, just at
+    * quadratic cost (SCALE_PROBE.md's measured Tier-B blow-up). With
+    * `cap = Some(factor)` the step keeps the contract, in this order:
+    *  1. ONE 1-row corpus count ([[baseCountFrame]], memoized as
+    *     `<cacheKey>:basecount`) feeds both gates, so the salted/unsalted
+    *     twins and steady-state re-runs share a single count scan;
+    *  2. the banding, memoized as `<cacheKey>` ([[memo]] — the
+    *     ingest-phase-index pattern: banding a static corpus is build-once
+    *     work shared by twins, consumers and re-runs; the caller
+    *     fingerprints the corpus FILES and every banding parameter into the
+    *     key, so changed data can never hit a stale entry), is checkpointed
+    *     — it feeds the stats pass plus both join sides, and materializing
+    *     n·bands narrow rows once beats three signature-projection scans —
+    *     and passed through the PRE-JOIN gate [[bandVolumeGuard]], which
+    *     raises before the self-join shuffles a single pair row;
+    *  3. the plain [[bandSelfJoin]], or with `salt = Some((salts, hotMin))`
+    *     the hot-band [[saltedBandSelfJoin]] (pair-set identical);
+    *  4. the candidates are materialized — they feed the count AND the
+    *     caller's verify — and the EAGER post-join audit (the exact
+    *     backstop of the pre-join bound) compares their count against the
+    *     corpus count on the driver and throws an IllegalStateException
+    *     naming `capName`. The step therefore raises at CALL time (the
+    *     [[Sketches.kmvPairwise]] contract), even for a caller that never
+    *     executes the returned plan. This replaced an in-plan per-row
+    *     raise_error guard riding a broadcast-stats checkpoint, whose extra
+    *     stats job cost ~0.2-0.3 s per query at sf0.1 and proved nothing the
+    *     eager check doesn't: the blow-up is decidable the moment the
+    *     candidate frame exists.
+    *
+    * Uncapped (`cap = None`, deliberate measurement runs) nothing is
+    * counted or gated and the candidates stay lazy; the salted join still
+    * gets a checkpointed banding for its four consumers. */
+  def guardedBandCandidates(corpus: DataFrame, idCol: String,
+                            aName: String, bName: String, bands: Int,
+                            cap: Option[Double], capName: String, what: String,
+                            salt: Option[(Int, Int)], cacheKey: Option[String])(
+                            banding: => Option[DataFrame]): Option[DataFrame] = {
+    def memoized[T](suffix: String)(build: => T): T =
+      cacheKey.fold(build)(k => memo(k + suffix, corpus.sparkSession)(build))
+    val base = cap.map(_ => memoized(":basecount")(baseCountFrame(corpus)))
+    val bandedOpt = memoized("")(banding.map(b => cap.fold(b)(f =>
+      bandVolumeGuard(b.localCheckpoint(), "band_key", base.get, f, bands, what, capName))))
+    bandedOpt.map { banded =>
+      val cand = salt match {
+        case Some((salts, hotMin)) =>
+          saltedBandSelfJoin(if (cap.isDefined) banded else banded.localCheckpoint(),
+            idCol, "band_key", aName, bName, salts, hotMin)
+        case None => bandSelfJoin(banded, idCol, "band_key", aName, bName)
+      }
+      cap.fold(cand) { f =>
+        val mat = cand.localCheckpoint()
+        val nCand = mat.count()
+        val nBase = base.get.head().getLong(0)
+        if (nCand > f * nBase) throw new IllegalStateException(
+          s"$what: band-join candidates exceed $f x corpus size: $nCand " +
+            s"candidates for $nBase rows. ${raiseHint(capName)}")
+        mat
+      }
+    }
   }
 
   /** Write a bucketed+sorted table: joins and aggregations on the bucket key

@@ -109,16 +109,16 @@ object Similarity {
 
   /** Default candidate-volume cap for the registered hyperplane-LSH
     * production paths: candidates must stay under 2048 × |vectors| or the
-    * query fails loudly (the [[lshCosinePairs]] eager audit /
-    * [[Scale.candidateVolumeGuard]]). Sized to the ADVERSARIAL testdata
-    * regime (cos-0.45 over near-random embeddings measures ~940
-    * candidates/vec at sf0.1 — ~94% of all pairs on a 2000-vector corpus,
-    * the worst case for any sign-LSH) with 2× headroom, while still
-    * bounding a 100 TB run at linear-in-n: an all-hot corpus at 10× the
-    * rows crosses the cap and FAILS LOUDLY instead of silently running
-    * quadratic pair volume (SCALE_PROBE.md's measured ×69 Tier-B blow-up
-    * is the motivation). At a realistic near-dup threshold (cos ≥ 0.9)
-    * real corpora sit orders of magnitude below this. */
+    * query fails loudly ([[Scale.guardedBandCandidates]]). Sized to the
+    * ADVERSARIAL testdata regime (cos-0.45 over near-random embeddings
+    * measures ~940 candidates/vec at sf0.1 — ~94% of all pairs on a
+    * 2000-vector corpus, the worst case for any sign-LSH) with 2×
+    * headroom, while still bounding a 100 TB run at linear-in-n: an
+    * all-hot corpus at 10× the rows crosses the cap and FAILS LOUDLY
+    * instead of silently running quadratic pair volume (SCALE_PROBE.md's
+    * measured ×69 Tier-B blow-up is the motivation). At a realistic
+    * near-dup threshold (cos ≥ 0.9) real corpora sit orders of magnitude
+    * below this. */
   val DefaultCandidatesPerVec = 2048.0
 
   /** Banded hyperplane LSH near-dup PAIRS — the bucketed scale twin of
@@ -144,34 +144,20 @@ object Similarity {
     *
     * The candidate-volume audit DEFAULTS ON ([[DefaultCandidatesPerVec]]);
     * pass `maxCandidatesPerVec = None` only for deliberately-uncapped
-    * measurement runs.
-    *
-    * EAGER while capped, not a lazy plan builder (the [[graft.operators
-    * .Sketches.kmvPairwise]] contract): construction materializes the
-    * banding and the candidate frame and runs the volume audits before
-    * returning, so an over-cap corpus throws at call time — even for a
-    * caller that never executes the returned plan. */
+    * measurement runs. Candidates come from [[Scale.guardedBandCandidates]]
+    * (`bandedCacheKey` memoizes the corpus count and the banding, and
+    * `saltHotBands = (salts, hotMin)` routes bands with >= hotMin members
+    * through the hot-band skew guard — a degenerate hyperplane region puts
+    * m vectors in one band and the plain self-join makes its m² pairs ONE
+    * reducer task), so while capped the call is EAGER, not a lazy plan
+    * builder: an over-cap corpus throws at call time — even for a caller
+    * that never executes the returned plan. */
   def lshCosinePairs(emb: DataFrame, id: String, vec: String, threshold: Double,
                      bands: Int = 48, rowsPerBand: Int = 4, seed: Long = 42L,
                      dim: Option[Int] = None,
                      maxCandidatesPerVec: Option[Double] = Some(DefaultCandidatesPerVec),
                      saltHotBands: Option[(Int, Int)] = None,
                      bandedCacheKey: Option[String] = None): DataFrame = {
-    // ONE corpus-count frame feeds both volume gates (pre-join band
-    // populations + post-join candidate audit), and under `bandedCacheKey`
-    // it is memoized alongside the banding — the salted/unsalted twins and
-    // steady-state re-runs share a single count scan of the corpus. Built
-    // BEFORE the banding memo is entered: Scale.memo rides a
-    // ConcurrentHashMap.compute, and a nested memo call from inside
-    // another entry's build can hit the map's recursive-update restriction.
-    val baseCount: Option[DataFrame] =
-      if (maxCandidatesPerVec.isEmpty) None
-      else Some(bandedCacheKey match {
-        case Some(k) =>
-          Scale.memo(k + ":basecount",
-            emb.sparkSession)(Scale.baseCountFrame(emb))
-        case None => Scale.baseCountFrame(emb)
-      })
     def bandedOf(): Option[DataFrame] = {
       // dim from table metadata when known (skips a scan); else from the data
       val d = dim.getOrElse {
@@ -188,93 +174,13 @@ object Similarity {
       val keysCol = call_function("lsh_band_keys",
         asD(col(vec)), typedlit(planes.flatten.toIndexedSeq),
         lit(bands), lit(rowsPerBand))
-      val banded0 = emb.select(col(id), explode(keysCol).as("band_key"))
-      // PRE-JOIN gate (Scale.bandVolumeGuard): with the cap on, band
-      // populations prove an over-cap candidate volume BEFORE the self-join
-      // shuffles a single pair row — at 100 TB an all-hot corpus dies here,
-      // not inside the m² join. banded is checkpointed when guarded: it
-      // feeds the stats pass plus both join sides, and materializing n·bands
-      // narrow rows once beats three sig-projection scans.
-      Some(maxCandidatesPerVec match {
-        case Some(f) => Scale.bandVolumeGuard(banded0.localCheckpoint(),
-          "band_key", emb, f, bands, "lshCosinePairs", baseCount)
-        case None => banded0
-      })
+      Some(emb.select(col(id), explode(keysCol).as("band_key")))
     }
-    // `bandedCacheKey` memoizes the BANDING of a static corpus — the
-    // checkpointed (id, band_key) rows plus the pre-join gate's 1-row
-    // stats — process-locally, the ingest-phase-index pattern the ANN
-    // paths use via StateCache: banding a static corpus is build-once
-    // work, and the salted/unsalted twins (and a query's steady-state
-    // re-runs) would otherwise each re-scan, re-hash and re-count the
-    // same vectors. The caller owns invalidation by fingerprinting the
-    // corpus FILES into the key (StateCache.fingerprint), so a changed
-    // corpus can never hit a stale entry; a cache entry from a stopped
-    // session is rebuilt (checkpointed blocks die with their session).
-    val bandedOpt = bandedCacheKey match {
-      case Some(k) =>
-        Scale.memo(k, emb.sparkSession)(bandedOf())
-      case None => bandedOf()
-    }
-    val banded = bandedOpt.getOrElse {
-      return emb.select(col(id).as("vec_a"), col(id).as("vec_b"),
-        lit(0.0).as("cosine")).limit(0)
-    }
-    // saltHotBands = (salts, hotMin) routes bands with >= hotMin members
-    // through Scale.saltedBandSelfJoin — the hot-band skew guard (a
-    // degenerate hyperplane region puts m vectors in one band and the
-    // plain self-join makes its m² pairs ONE reducer task); pair-set
-    // identity is the helper's spec-asserted contract, so the salted form
-    // gates against the same exhaustive oracle
-    // Candidates are DEDUPED BEFORE SCORING (a pair colliding in m bands
-    // appears m times): scoring duplicates instead — pushing the distinct
-    // past the threshold filter so only survivors shuffle — was measured
-    // SLOWER at sf0.1 (4.5 s vs 2.65 s for the candidate build): the
-    // distinct's partial aggregate dedups map-side before the shuffle,
-    // while score-all pays a dot + two join probes per duplicate collision
-    // row. Distinct-early also holds at corpus scale: the shuffle is
-    // O(unique candidates), the map-side hash O(collisions).
-    val cand0 = saltHotBands match {
-      case Some((salts, hotMin)) =>
-        Scale.saltedBandSelfJoin(banded, id, "band_key",
-          "vec_a", "vec_b", salts, hotMin,
-          inputMaterialized = maxCandidatesPerVec.isDefined)
-      case None =>
-        banded.select(col(id).as("vec_a"), col("band_key"))
-          .join(banded.select(col(id).as("vec_b"), col("band_key")), "band_key")
-          .filter(col("vec_a") < col("vec_b"))
-          .select(col("vec_a"), col("vec_b")).distinct()
-    }
-    // SELF-CERTIFYING CANDIDATE-COUNT AUDIT (the withRecallAudit pattern,
-    // pointed at the other failure mode): banded LSH is only the scale
-    // path while |candidates| stays O(c·n) — a degenerate plane region, a
-    // near-duplicate-saturated corpus, or an under-banded r would silently
-    // regress candidate generation toward all-pairs and the query would
-    // still return correct rows, just at quadratic cost. The candidate
-    // list is eagerly materialized regardless (it feeds the count AND the
-    // scoring join — the mutualKnnDedupFromPairs discipline), so the audit
-    // is EAGER and driver-side (the kmvPairwise contract): count the
-    // checkpointed blocks, compare against the memoized corpus count, and
-    // throw before the scoring join is planned. This replaced an in-plan
-    // per-row raise_error guard riding a broadcast-stats checkpoint — the
-    // extra stats job plus the per-row branch cost ~0.2-0.3 s per query at
-    // sf0.1 and proved nothing the eager check doesn't: the blow-up is
-    // decidable the moment the candidate frame exists, and the throw here
-    // fires even for a caller that never executes the returned plan.
-    def candOf(): DataFrame = maxCandidatesPerVec match {
-      case None => cand0
-      case Some(factor) =>
-        val mat = cand0.localCheckpoint()
-        val nCand = mat.count()
-        val nVec = baseCount.get.head().getLong(0)
-        if (nCand > factor * nVec) throw new IllegalStateException(
-          s"lshCosinePairs: band-join candidates exceed $factor x n: " +
-            s"$nCand candidates for $nVec vectors. If this corpus is " +
-            "legitimately duplicate-saturated, raise the cap (e.g. " +
-            "maxCandidatesPerVec = Some(higher)) or disable it with " +
-            "maxCandidatesPerVec = None")
-        mat
-    }
+    def scoredOf(): Option[DataFrame] =
+      Scale.guardedBandCandidates(emb, id, "vec_a", "vec_b", bands,
+          maxCandidatesPerVec, "maxCandidatesPerVec", "lshCosinePairs",
+          saltHotBands, bandedCacheKey)(bandedOf())
+        .map(rescoreCandidates(_, emb, id, vec))
     // The SCORED candidate frame is threshold-independent (the threshold
     // only filters it), so under `bandedCacheKey` the checkpointed
     // (vec_a, vec_b, cosine) rows are memoized one level above the
@@ -292,10 +198,11 @@ object Similarity {
         val saltTag = saltHotBands
           .map { case (s, h) => s"salt$s-$h" }.getOrElse("plain")
         Scale.memo(s"$k:scored:$saltTag", emb.sparkSession)(
-          rescoreCandidates(candOf(), emb, id, vec).localCheckpoint())
-      case _ => rescoreCandidates(candOf(), emb, id, vec)
+          scoredOf().map(_.localCheckpoint()))
+      case _ => scoredOf()
     }
-    scored.filter(col("cosine") >= threshold)
+    scored.fold(emb.select(col(id).as("vec_a"), col(id).as("vec_b"),
+      lit(0.0).as("cosine")).limit(0))(_.filter(col("cosine") >= threshold))
   }
 
   /** The exact-cosine RE-SCORE tail shared by [[lshCosinePairs]] and the

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{EngagementAggregator, Scale}
+import graft.operators.{EngagementAggregator, Scale, Similarity}
 
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -65,19 +66,78 @@ class ScaleSpec extends AnyFunSuite {
     assert(allCold sameElements plain)
   }
 
-  test("candidateVolumeGuard: pass-through identity under the cap, raise above it") {
-    val corpus = (1L to 50L).toDF("id")
-    val cand = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("doc_a", "doc_b")
-    // under the cap: output ≡ input, columns preserved
-    val kept = Scale.candidateVolumeGuard(cand, corpus, 1.0, "t")
-    assert(kept.columns.toSeq == Seq("doc_a", "doc_b"))
-    assert(kept.orderBy($"doc_a").as[(Long, Long)].collect()
-      sameElements cand.orderBy($"doc_a").as[(Long, Long)].collect())
-    // above the cap: every downstream consumption raises
-    val e = intercept[Exception] {
-      Scale.candidateVolumeGuard(cand, corpus, 0.01, "t").collect()
+  test("guardedBandCandidates: plain and salted joins under the cap, pre-join gate, post-join audit") {
+    val corpus = (1L to 10L).toDF("id")
+    // hot band B0 plus cold bands, (1, 2) repeating across bands: 8 pair
+    // slots and 7 unique pairs, under 1.0 x 10 rows at bands = 1
+    val sparse = (Seq((1L, "B0"), (2L, "B0"), (3L, "B0"), (4L, "B0"),
+      (3L, "b1"), (5L, "b1"), (1L, "b2"), (2L, "b2"), (6L, "b3"))).toDF("id", "band_key")
+    val expected = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (3L, 5L))
+    // 10 ids in one band: 45 pair slots > 1.0 x 10 rows x 1 band
+    val clique = (1L to 10L).map(i => (i, "B0")).toDF("id", "band_key")
+    // 20 distinct pairs, each alone in its band: 20 slots <= 1.0 x 10 rows
+    // x 4 bands keeps the pre-join gate silent, yet 20 unique pairs > 10
+    val allPairs = for (a <- 1L to 10L; b <- a + 1 to 10L) yield (a, b)
+    val spread = allPairs.take(20)
+      .zipWithIndex.flatMap { case ((a, b), k) => Seq((a, s"p$k"), (b, s"p$k")) }
+      .toDF("id", "band_key")
+    def pairs(df: DataFrame): Seq[(Long, Long)] =
+      df.orderBy($"a", $"b").as[(Long, Long)].collect().toSeq
+    assert(pairs(Scale.bandSelfJoin(sparse, "id", "band_key", "a", "b")) == expected)
+    assert(pairs(Scale.saltedBandSelfJoin(sparse, "id", "band_key", "a", "b",
+      salts = 2, hotMin = 3)) == expected)
+    val preJoin = "projected band candidates exceed"
+    val postJoin = "band-join candidates exceed"
+    val salted = Some((2, 3))
+    // (case, banding, cap, salt, bands, expected pairs | raise message)
+    val cases = Seq[(String, DataFrame, Option[Double],
+        Option[(Int, Int)], Int, Either[String, Seq[(Long, Long)]])](
+      ("under cap, plain", sparse, Some(1.0), None, 1, Right(expected)),
+      ("under cap, salted", sparse, Some(1.0), salted, 1, Right(expected)),
+      ("uncapped clique, plain", clique, None, None, 1, Right(allPairs)),
+      ("uncapped clique, salted", clique, None, salted, 1, Right(allPairs)),
+      ("clique, plain", clique, Some(1.0), None, 1, Left(preJoin)),
+      ("clique, salted", clique, Some(1.0), salted, 1, Left(preJoin)),
+      ("one pair per band, plain", spread, Some(1.0), None, 4, Left(postJoin)),
+      ("one pair per band, salted", spread, Some(1.0), salted, 4, Left(postJoin)))
+    cases.foreach { case (name, banded, cap, salt, bands, want) =>
+      def call() = Scale.guardedBandCandidates(corpus, "id", "a", "b", bands,
+        cap, "maxCandidatesPerRow", "t", salt, None)(Some(banded)).get
+      want match {
+        case Right(exp) => assert(pairs(call()) == exp, name)
+        case Left(msg) =>
+          // no action on the returned frame: the call itself must raise
+          val e = intercept[Exception](call(): Unit)
+          val m = e.getMessage
+          assert(m.contains(msg) && m.contains("candidates exceed") &&
+            m.contains("maxCandidatesPerRow = None"), s"$name: $m")
+          if (msg == postJoin)
+            assert(e.isInstanceOf[IllegalStateException] && !m.contains(preJoin), s"$name: $m")
+      }
     }
-    assert(e.getMessage.contains("candidate volume exceeds"), e.getMessage)
+    // memo keys: the corpus count under <key>:basecount, the banding under <key>
+    val key = "scalespec-guarded"
+    assert(pairs(Scale.guardedBandCandidates(corpus, "id", "a", "b", 1, Some(1.0),
+      "maxCandidatesPerRow", "t", None, Some(key))(Some(sparse)).get) == expected)
+    assert(Scale.memo[DataFrame](s"$key:basecount", spark)(
+      fail("corpus count not memoized")).head().getLong(0) == 10L)
+    assert(Scale.memo[Option[DataFrame]](key, spark)(
+      fail("banding not memoized")).exists(_.count() == 9L))
+  }
+
+  test("pre-join gate names the caller's cap: lshCosinePairs raises with maxCandidatesPerVec") {
+    // SimilaritySpec's all-hot corpus: 4200 identical vectors through one
+    // 1-bit band are ~8.8M pair slots > 2048 x 4200 rows x 1 band, so the
+    // PRE-JOIN gate is the one that fires
+    val hot = spark.range(4200)
+      .select($"id".as("vec_id"), typedLit(Array(1.0f, 0.5f)).as("embedding"))
+    val e = intercept[Exception] {
+      Similarity.lshCosinePairs(hot, "vec_id", "embedding", 0.9,
+        bands = 1, rowsPerBand = 1): Unit
+    }
+    val m = e.getMessage
+    assert(m.contains("projected band candidates exceed"), m)
+    assert(m.contains("maxCandidatesPerVec") && !m.contains("maxCandidatesPerDoc"), m)
   }
 
   test("bandVolumeGuard: sound pre-join gate — silent when the post-gate would be, raises on a clique") {
@@ -86,13 +146,15 @@ class ScaleSpec extends AnyFunSuite {
     val clique = (1L to 10L).map(i => (i, "B0")).toDF("id", "band_key")
     val corpus = (1L to 10L).toDF("id")
     val e = intercept[Exception] {
-      Scale.bandVolumeGuard(clique, "band_key", corpus, 1.0, 1, "t").collect()
+      Scale.bandVolumeGuard(clique, "band_key", Scale.baseCountFrame(corpus), 1.0, 1, "t",
+        "maxCandidatesPerDoc").collect()
     }
     assert(e.getMessage.contains("candidates exceed"), e.getMessage)
     // soundness: slots <= factor x n x bands -> pass-through identity,
     // even though collisions mean slots > unique candidates
     val sparse = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b")).toDF("id", "band_key")
-    val kept = Scale.bandVolumeGuard(sparse, "band_key", corpus, 1.0, 2, "t")
+    val kept = Scale.bandVolumeGuard(sparse, "band_key", Scale.baseCountFrame(corpus),
+      1.0, 2, "t", "maxCandidatesPerDoc")
     assert(kept.orderBy($"id").as[(Long, String)].collect()
       sameElements sparse.orderBy($"id").as[(Long, String)].collect())
   }
