@@ -7,12 +7,23 @@ import org.apache.spark.sql.types._
   * reference's logical-table schemas (FIXTURES.md §A) used by the
   * streaming/JSON ingest path and unit tests.
   *
-  * Parquet is self-describing, so testdata readers rely on the file schema
-  * (Catalyst still prunes columns / pushes filters into the scan). The
-  * explicit StructTypes below mirror the reference's declared schemas
-  * (reference: consumer2/consumer2.py:78-114) for the schema'd-JSON path
-  * (SURVEY.md §2.1 S9), where inference would be a scale hazard: at 100 TB a
-  * schema-inference pass is a full extra read of the lake.
+  * Parquet is self-describing, and a schema-less `spark.read.parquet` runs
+  * a Spark job to read the file footers on every call. [[load]] pays that
+  * job once per table: a process-wide catalog keyed on the table path and
+  * the session's parquet inference settings ([[InferenceConfs]]) holds the
+  * schema inferred from it, stamped with the (path, length, mtime) of
+  * every data file ([[graft.operators.StateCache.fingerprint]]). A later
+  * load whose stamp matches reads with the cached schema, so no job runs; a
+  * rewritten table is inferred again and replaces its entry, so the catalog
+  * holds one entry per path and settings. The settings are part of the key,
+  * not of the stamp, because loading `events` turns `nanosAsLong` on for
+  * the session: tables loaded before and after it keep both entries rather
+  * than re-inferring. Only schemas are cached, never DataFrames: a
+  * DataFrame would pin its session and a stale file listing. Catalyst still prunes columns and pushes filters into the
+  * scan. The explicit StructTypes below mirror the reference's declared
+  * schemas (reference: consumer2/consumer2.py:78-114) for the schema'd-JSON
+  * path (SURVEY.md §2.1 S9), where inference would be a scale hazard: at
+  * 100 TB a schema-inference pass is a full extra read of the lake.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -35,9 +46,45 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      normalizeEventTs(raw)
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+      normalizeEventTs(read(spark, s"$sfDir/$name.parquet", name))
+    } else read(spark, s"$sfDir/$name.parquet", name)
+  }
+
+  /** The session settings that change what parquet schema inference
+    * returns for the same files; part of every catalog key. */
+  private val InferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** (path, settings) -> (stamp, raw inferred schema): the catalog of the
+    * class doc. */
+  private val catalog =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, StructType)]()
+
+  /** `path` read with its cataloged raw schema, inferring it (one job,
+    * labelled `tables/<name>/schema`) when the stamp is new. */
+  private def read(spark: SparkSession, path: String, name: String): DataFrame = {
+    val key = (path,
+      InferenceConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}").mkString(","))
+    val stamp = graft.operators.StateCache.fingerprint(spark, path, "")
+    Option(catalog.get(key)).filter(_._1 == stamp) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val raw = withJobDescription(spark, s"tables/$name/schema")(spark.read.parquet(path))
+        catalog.put(key, (stamp, raw.schema))
+        raw
+    }
+  }
+
+  /** Runs `body` with the jobs it launches described as `desc`, restoring
+    * the caller's description afterwards. */
+  private[graft] def withJobDescription[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** Normalize `ts` to TimestampType regardless of source flavor (see

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The crash-safe publish protocol of a state dir — the one copy behind
   * the read-merge-rewrite sinks in [[Streaming]] and
@@ -11,7 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[StateDir.rename]].
   *
   * A writer builds the complete new version of `<dir>` under [[next]]
-  * (`<dir>_next`) and then calls [[publish]], which:
+  * (`<dir>_next`), writing each table with [[write]]: the table's parquet
+  * files, then its schema (`schema.json`) in the table's hidden `_schema`
+  * file. It then calls [[publish]], which:
   *  1. for marker sinks, writes the `_applied` marker as the LAST file
   *     in `_next`;
   *  2. moves the live `<dir>` aside to `<dir>_old` (if there is one);
@@ -35,6 +38,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * folds, ledgers) carry it; last-write-wins upsert and compaction do
   * not.
   *
+  * THE RECORDED SCHEMA. [[read]] reads a live table with the schema that
+  * [[write]] recorded beside it, so a steady merge launches no
+  * footer-inference job. `_schema` is written before the marker and moves
+  * with its data in the same rename, so it always describes the files
+  * beside it. A table without one (state published before schemas were
+  * recorded, or a `_next` written by other code) is read by inference,
+  * its job labelled `<caller>/state/schema`.
+  *
   * THE MICRO-BATCH APPLY. A single-table sink is one call of
   * [[StateDir.applyBatch]] with its merge function, which runs, in this
   * order:
@@ -42,7 +53,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  2. for marker sinks, skip a batch id at or below the applied one;
   *  3. test the dir for state ([[StateDir.hasState]]);
   *  4. read the live table, if there is one;
-  *  5. write the merge of it and the batch to [[next]];
+  *  5. [[write]] the merge of it and the batch to [[next]];
   *  6. [[publish]], with the batch id as the marker for marker sinks.
   * Sinks whose marker carries more than the batch id, or whose state is
   * several tables, call [[recovered]] and [[publish]] themselves and test
@@ -94,13 +105,7 @@ private[graft] final class StateDir(spark: SparkSession, dir: String, caller: St
   def marker: Option[Seq[Long]] = {
     val m = new Path(cur, StateDir.Marker)
     if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      val text =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
-      Some(text.trim.split(" ").toSeq.map(_.toLong))
-    }
+    else Some(readText(m).trim.split(" ").toSeq.map(_.toLong))
   }
 
   /** The last applied batch id, -1 before the first publish. */
@@ -111,15 +116,32 @@ private[graft] final class StateDir(spark: SparkSession, dir: String, caller: St
 
   /** The live table, or None while the dir holds no state. */
   def live: Option[DataFrame] =
-    if (hasState) Some(spark.read.parquet(dir)) else None
+    if (hasState) Some(read()) else None
+
+  /** The live table `table` ("" is the dir itself), read with its
+    * recorded schema: see THE RECORDED SCHEMA in the class doc. */
+  def read(table: String = ""): DataFrame = {
+    val path = sub(cur, table)
+    val recorded = new Path(path, StateDir.Schema)
+    if (fs.exists(recorded))
+      spark.read.schema(DataType.fromJson(readText(recorded)).asInstanceOf[StructType])
+        .parquet(path.toString)
+    else graft.Tables.withJobDescription(spark, s"$caller/state/schema")(
+      spark.read.parquet(path.toString))
+  }
+
+  /** Writes `df` as table `table` ("" is the dir itself) of [[next]], then
+    * records its schema there for [[read]]. */
+  def write(df: DataFrame, table: String = ""): Unit = {
+    val path = sub(nextPath, table)
+    df.write.mode("overwrite").parquet(path.toString)
+    writeText(new Path(path, StateDir.Schema), df.schema.json)
+  }
 
   /** Publishes [[next]] as the live dir: writes `marker` (when given) as
     * the last file in `_next`, then the checked two-rename swap. */
   def publish(marker: Long*): Unit = {
-    if (marker.nonEmpty) {
-      val out = fs.create(new Path(nextPath, StateDir.Marker), true)
-      try out.write(marker.mkString(" ").getBytes("UTF-8")) finally out.close()
-    }
+    if (marker.nonEmpty) writeText(new Path(nextPath, StateDir.Marker), marker.mkString(" "))
     if (fs.exists(cur)) rename(cur, old, s"failed to move $cur aside")
     rename(nextPath, cur, s"failed to publish $nextPath")
     fs.delete(old, true): Unit // debris left by a crash here is dropped by recover
@@ -127,10 +149,25 @@ private[graft] final class StateDir(spark: SparkSession, dir: String, caller: St
 
   private def rename(from: Path, to: Path, what: String): Unit =
     StateDir.rename(fs, from, to, s"$caller: $what")
+
+  private def sub(root: Path, table: String): Path =
+    if (table.isEmpty) root else new Path(root, table)
+
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+    finally in.close()
+  }
+
+  private def writeText(p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
 }
 
 private[graft] object StateDir {
   private val Marker = "_applied"
+  private val Schema = "_schema"
 
   /** A checked rename: `FileSystem.rename` reports failure by returning
     * false, and a swallowed false is silent data loss. */
@@ -148,11 +185,11 @@ private[graft] object StateDir {
   /** The "no state" rule, the one definition: `dir` holds state when it
     * exists and has a visible entry. Hidden `_`/`.` entries do not count,
     * directories included — a `_temporary` left by an interrupted write,
-    * the `_applied` marker and checksum files are no state — and a
-    * pre-created empty dir is no state, so neither sends the first batch
-    * into a parquet read of a dir with no data files. The test goes
-    * through the dir's own Hadoop FileSystem: a `java.io.File` check would
-    * be local-only and silently skip the merge for s3a://, hdfs:// or
+    * the `_applied` marker, a `_schema` record and checksum files are no
+    * state — and a pre-created empty dir is no state, so neither sends the
+    * first batch into a parquet read of a dir with no data files. The test
+    * goes through the dir's own Hadoop FileSystem: a `java.io.File` check
+    * would be local-only and silently skip the merge for s3a://, hdfs:// or
     * file:// dirs. */
   def hasState(spark: SparkSession, dir: String): Boolean = {
     val path = new Path(dir)
@@ -182,7 +219,7 @@ private[graft] object StateDir {
                 (merge: Option[DataFrame] => DataFrame): Unit = {
     val state = recovered(spark, dir, caller, requireMarker = batchId.isDefined)
     if (!batchId.exists(_ <= state.appliedBatch)) {
-      merge(state.live).write.mode("overwrite").parquet(state.next)
+      state.write(merge(state.live))
       state.publish(batchId.toSeq: _*)
     }
   }

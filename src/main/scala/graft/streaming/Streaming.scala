@@ -320,10 +320,12 @@ object Streaming {
       // anti-join and never even list the pairs table this batch
       val freshBatch = stOpt.isDefined && batchId > st.lastBatchId
       // explicit schemas on every state/staged read: a schema-less
-      // spark.read.parquet runs a footer-inference JOB per call — two
-      // pure-overhead jobs per micro-batch at small batch sizes. Both
-      // schemas derive from the batch itself (no hardcoded types): the
-      // sigs schema is the staged projection's own analyzed schema
+      // spark.read.parquet runs a footer-inference JOB per call (the job
+      // that Tables.load's catalog and StateDir.read's recorded schema
+      // remove for tables and published state). This append-only state
+      // has no publish to record a schema at, so both schemas derive from
+      // the batch itself (no hardcoded types): the sigs schema is the
+      // staged projection's own analyzed schema
       import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
       val sigSchema = batch
         .select(col(idCol), col(textCol),
@@ -631,9 +633,12 @@ object Streaming {
                         (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     // only "no state yet" skips the anti-join, the StateDir.applyBatch rule:
-    // a swallowed failure here would append duplicates (exactly-once lost)
-    val stored =
-      if (StateDir.hasState(spark, stateDir)) Some(spark.read.parquet(stateDir)) else None
+    // a swallowed failure here would append duplicates (exactly-once lost).
+    // The anti-join reads only the key column, so the batch's key field is
+    // the state's read schema: no footer-inference job per call
+    val stored = if (StateDir.hasState(spark, stateDir))
+      Some(spark.read.schema(batch.select(col(keyCol)).schema).parquet(stateDir))
+    else None
     graft.operators.Ops.insertIfAbsent(batch, keyCol, stored)
       .write.mode("append").parquet(stateDir)
   }
@@ -793,7 +798,7 @@ object Streaming {
     val d = if (topK1.length <= k) 0L else topK1.last.getLong(1)
     val pruned = merged.filter(col("est") > d)
       .select(col("item"), (col("est") - d).as("est"))
-    pruned.write.mode("overwrite").parquet(state.next)
+    state.write(pruned)
     state.publish(batchId, nPrev + nBatch)
   }
 
@@ -998,7 +1003,6 @@ object Streaming {
       .groupBy(col("bin")).agg(count(lit(1)).as("n_b"))
     val nRows = batch.count()
     val nVals = bins.agg(coalesce(sum(col("n_b")), lit(0L))).head().getLong(0)
-    val next = state.next
     if (!state.hasState) {
       // first applied batch FREEZES the reference — so an empty micro-batch
       // (foreachBatch does deliver them, e.g. at stream start before data
@@ -1006,12 +1010,10 @@ object Streaming {
       // every later batch against uniform smoothing forever. Skip without
       // writing state or marker; the NEXT non-empty batch freezes.
       if (nVals == 0) return
-      bins.select(col("bin"), col("n_b").as("n_a"))
-        .write.mode("overwrite").parquet(s"$next/ref")
-      Seq.empty[(Long, Long, Double)].toDF("batch_id", "n_rows", "psi")
-        .write.mode("overwrite").parquet(s"$next/ledger")
+      state.write(bins.select(col("bin"), col("n_b").as("n_a")), "ref")
+      state.write(Seq.empty[(Long, Long, Double)].toDF("batch_id", "n_rows", "psi"), "ledger")
     } else {
-      val ref = spark.read.parquet(s"$stateDir/ref")
+      val ref = state.read("ref")
       // headOption, not head(): an empty batch vs any reference must score
       // psi = 0.0 (no observed mass, no evidence of drift) rather than
       // kill the streaming query with NoSuchElementException
@@ -1019,10 +1021,9 @@ object Streaming {
         if (nVals == 0) 0.0
         else graft.operators.Profiler.driftFromBins(ref, bins)
           .select(col("psi")).collect().headOption.map(_.getDouble(0)).getOrElse(0.0)
-      ref.write.mode("overwrite").parquet(s"$next/ref")
-      spark.read.parquet(s"$stateDir/ledger")
-        .unionByName(Seq((batchId, nRows, psi)).toDF("batch_id", "n_rows", "psi"))
-        .write.mode("overwrite").parquet(s"$next/ledger")
+      state.write(ref, "ref")
+      state.write(state.read("ledger")
+        .unionByName(Seq((batchId, nRows, psi)).toDF("batch_id", "n_rows", "psi")), "ledger")
     }
     state.publish(batchId)
   }
@@ -1067,7 +1068,6 @@ object Streaming {
     import spark.implicits._
     val clean = batch.filter(col(vecCol).isNotNull)
     val nRows = clean.count()
-    val next = state.next
     if (!state.hasState) {
       // freeze on the first batch that can seed k clusters — an empty or
       // sub-k batch must NOT freeze a degenerate reference (the
@@ -1075,30 +1075,25 @@ object Streaming {
       if (nRows < k) return
       val (centroids, assign) = graft.operators.Clustering.kmeansFit(
         clean, idCol, vecCol, k, iters)
-      centroids.zipWithIndex.flatMap { case (c, ci) =>
+      state.write(centroids.zipWithIndex.flatMap { case (c, ci) =>
         c.zipWithIndex.map { case (q, di) => (ci.toLong, (di + 1).toLong, q) }
-      }.toSeq.toDF("cluster", "dim", "q")
-        .coalesce(1).write.mode("overwrite").parquet(s"$next/centroids")
-      assign.groupBy(col("cluster").cast("long").as("bin"))
-        .agg(count(lit(1)).as("n_a"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$next/hist")
-      Seq.empty[(Long, Long, Double, Double, Double)]
-        .toDF("batch_id", "n_rows", "assign_psi", "mean_shift", "max_shift")
-        .write.mode("overwrite").parquet(s"$next/ledger")
+      }.toSeq.toDF("cluster", "dim", "q").coalesce(1), "centroids")
+      state.write(assign.groupBy(col("cluster").cast("long").as("bin"))
+        .agg(count(lit(1)).as("n_a")).coalesce(1), "hist")
+      state.write(Seq.empty[(Long, Long, Double, Double, Double)]
+        .toDF("batch_id", "n_rows", "assign_psi", "mean_shift", "max_shift"), "ledger")
     } else {
       // bounded metadata collect: k·dim centroid rows (the IvfIndex
       // centroid-read contract)
       val centroids = readCentroids(spark, s"$stateDir/centroids")
-      val refHist = spark.read.parquet(s"$stateDir/hist")
+      val refHist = state.read("hist")
       val (psi, meanShift, maxShift) =
         scoreEmbeddingBatch(clean, idCol, vecCol, centroids, refHist)
-      spark.read.parquet(s"$stateDir/centroids")
-        .write.mode("overwrite").parquet(s"$next/centroids")
-      refHist.write.mode("overwrite").parquet(s"$next/hist")
-      spark.read.parquet(s"$stateDir/ledger")
+      state.write(state.read("centroids"), "centroids")
+      state.write(refHist, "hist")
+      state.write(state.read("ledger")
         .unionByName(Seq((batchId, nRows, psi, meanShift, maxShift))
-          .toDF("batch_id", "n_rows", "assign_psi", "mean_shift", "max_shift"))
-        .write.mode("overwrite").parquet(s"$next/ledger")
+          .toDF("batch_id", "n_rows", "assign_psi", "mean_shift", "max_shift")), "ledger")
     }
     state.publish(batchId)
   }
@@ -1106,7 +1101,7 @@ object Streaming {
   /** The frozen-centroid matrix back from its row form (k·dim rows —
     * bounded index metadata, the IvfIndex read shape). */
   private[graft] def readCentroids(spark: SparkSession, path: String): Array[Array[Long]] = {
-    val rows = spark.read.parquet(path)
+    val rows = new StateDir(spark, path, "readCentroids").read()
       .select(col("cluster"), col("dim"), col("q")).collect()
     val k = rows.iterator.map(_.getLong(0)).max.toInt + 1
     val dim = rows.iterator.map(_.getLong(1)).max.toInt
@@ -1429,7 +1424,7 @@ object Streaming {
     * (rule, n_rows, n_violations, violation_rate) shape as a batch
     * [[graft.operators.Expectations.check]]. */
   def qualityState(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
+    new StateDir(spark, stateDir, "qualityState").read()
       .select(col("rule"), col("n_rows"), col("n_violations"),
         // same empty-input contract as the batch Expectations.check: a
         // ledger fed only empty/startup batches has n_rows = 0, and a

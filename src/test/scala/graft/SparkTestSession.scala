@@ -17,4 +17,17 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The descriptions of the jobs `body` launches, counted by a
+    * [[Profile.Collector]] drained by its sentinel job. */
+  def jobsOf(body: => Unit): Seq[String] = {
+    val c = new Profile.Collector(spark.sparkContext)
+    try {
+      c.drain()
+      c.reset()
+      body
+      c.drain()
+      c.jobs.map(_.desc)
+    } finally spark.sparkContext.removeSparkListener(c)
+  }
 }
