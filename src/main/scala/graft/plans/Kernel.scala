@@ -189,8 +189,11 @@ object GraftFunctions {
 /** `SparkSessionExtensions` hook: sessions built with
   * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.plans.GraftExtensions`) get every kernel of
-  * [[GraftFunctions]] as a SQL function. */
+  * [[GraftFunctions]] as a SQL function, and [[SmallSortOnePartition]] as
+  * an optimizer rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(e.injectFunction)
+    e.injectOptimizerRule(_ => SmallSortOnePartition)
+  }
 }

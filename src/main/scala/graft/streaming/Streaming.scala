@@ -290,10 +290,6 @@ object Streaming {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try act finally spark.conf.set("spark.sql.adaptive.enabled", was)
       }
-    // an observed count, or the count job `fallback` if it never arrives
-    def observed(o: Observation)(fallback: => Long): Long =
-      try Await.result(o.future, 10.seconds).getLong(0)
-      catch { case _: java.util.concurrent.TimeoutException => fallback }
     val (sigsDir, pairsDir) = (s"$stateDir/sigs", s"$stateDir/pairs")
     val stagingRoot = s"$stateDir/.staging"
     val fs = new org.apache.hadoop.fs.Path(stateDir)
@@ -775,10 +771,11 @@ object Streaming {
     * Crash/replay discipline is [[StateDir]]'s, with the running total as
     * the marker's second field, so a replayed batch is skipped and no
     * crash point separates the summary from its total. Per batch: one
-    * batch-grain count, one checkpointed merge, one k+1-row driver pull —
-    * bounded work, bounded state. Readers compare `est · (k+1) > n_total` (the marker's n) for
-    * the φ-frequency decision, exactly as the batch operator's
-    * verification pass does. */
+    * checkpointed merge, which also observes the batch's item total, and
+    * one k+1-row collect — bounded work, bounded state. Readers
+    * compare `est · (k+1) > n_total` (the marker's n) for the
+    * φ-frequency decision, exactly as the batch operator's verification
+    * pass does. */
   def trendingSink(itemCol: String, k: Int, stateDir: String)
                   (batch: DataFrame, batchId: Long): Unit = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -790,10 +787,14 @@ object Streaming {
       .select(col(itemCol).cast("string").as("item"))
       .filter(col("item").isNotNull)
       .groupBy(col("item")).agg(count(lit(1)).as("est"))
-    val nBatch = counts.agg(coalesce(sum(col("est")), lit(0L))).collect()(0).getLong(0)
-    val merged = state.live.fold(counts)(s =>
-      counts.unionByName(s).groupBy(col("item")).agg(sum(col("est")).as("est"))
+    val total = coalesce(sum(col("est")), lit(0L))
+    // the batch total rides the merge's checkpoint job
+    val obsN = Observation(s"graft_trend_n_${java.util.UUID.randomUUID}")
+    val seen = counts.observe(obsN, total.as("n"))
+    val merged = state.live.fold(seen)(s =>
+      seen.unionByName(s).groupBy(col("item")).agg(sum(col("est")).as("est"))
     ).localCheckpoint()
+    val nBatch = observed(obsN)(counts.agg(total).collect()(0).getLong(0))
     val topK1 = merged.orderBy(col("est").desc, col("item")).limit(k + 1).collect()
     val d = if (topK1.length <= k) 0L else topK1.last.getLong(1)
     val pruned = merged.filter(col("est") > d)
@@ -801,6 +802,11 @@ object Streaming {
     state.write(pruned)
     state.publish(batchId, nPrev + nBatch)
   }
+
+  /** An observed count, or the count job `fallback` if it never arrives. */
+  private def observed(o: Observation)(fallback: => Long): Long =
+    try Await.result(o.future, 10.seconds).getLong(0)
+    catch { case _: java.util.concurrent.TimeoutException => fallback }
 
   /** The running total (for the φ threshold) and last applied batch of a
     * [[trendingSink]] state dir: (batchId, n_total). */
@@ -1287,7 +1293,8 @@ object Streaming {
       col("timestamp").as("kafka_ts"))
 
   /** S4 — multi-topic Kafka JSON source: subscribe list, earliest
-    * offsets, then [[kafkaJsonProjection]]. */
+    * offsets, then [[kafkaJsonProjection]]. Untested API: no Kafka
+    * connector is on the classpath, so no spec starts this source. */
   def kafkaJsonSource(spark: SparkSession, servers: String, topics: Seq[String],
                       schema: org.apache.spark.sql.types.StructType): DataFrame =
     kafkaJsonProjection(
@@ -1440,7 +1447,9 @@ object Streaming {
   def kafkaJsonEnvelope(df: DataFrame): DataFrame =
     df.selectExpr("to_json(struct(*)) AS value")
 
-  /** S2 — Kafka JSON sink: [[kafkaJsonEnvelope]], topic routed. */
+  /** S2 — Kafka JSON sink: [[kafkaJsonEnvelope]], topic routed. Untested
+    * API: no Kafka connector is on the classpath, so no spec starts this
+    * sink. */
   def kafkaJsonSink(df: DataFrame, servers: String, topic: String): DataStreamWriter[Row] =
     kafkaJsonEnvelope(df)
       .writeStream.format("kafka")

@@ -34,7 +34,6 @@ class BandKeysSpec extends AnyFunSuite {
     val fixed: Seq[Option[Seq[Long]]] = Seq(
       None, Some(Seq.empty), Some(Seq(1L)), Some((1L to 8L)),
       Some((1L to 7L)), Some(Seq(Long.MinValue, -1L, 0L, Long.MaxValue)))
-    graft.plans.GraftFunctions.register(spark)
     val df = (fixed ++ sampled).toDF("sig")
     for ((bands, rows) <- Seq((2, 4), (4, 2), (1, 1), (3, 5))) {
       val got = df.select(

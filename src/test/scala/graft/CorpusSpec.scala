@@ -79,7 +79,6 @@ class CorpusSpec extends AnyFunSuite {
         sum(when($"c" > 1, $"c").otherwise(lit(0L))).as("dup"))
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    graft.plans.GraftFunctions.register(spark)
     Seq(2, 3).foreach { n =>
       val expected = refStats(n)
       val got = docs.select($"doc_id",

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestSession.{jobsOf, withConfs}
 
 /** Plan-discipline RATCHET over the lazily-constructible query core: the
   * graft.PlanAudit dev tool turned into a regression gate. Asserts, from
@@ -85,13 +86,67 @@ class PlanDisciplineSpec extends AnyFunSuite {
     assert(violations.isEmpty, violations.mkString("; "))
   }
 
+  private def planOf(name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+  private val RangeExchange = "Exchange rangepartitioning"
+  private val ruleOff =
+    Seq("spark.sql.optimizer.excludedRules" -> "graft.plans.SmallSortOnePartition")
+
+  /** Lazy-core queries whose sort keeps its range exchange at sf0.001:
+    * each sorts a join's output (or an aggregate over one), and without
+    * column statistics Spark estimates a join's size as the product of
+    * its sides' sizes, far above the advisory partition size. */
+  private val RangeSorted = Set("q_bigram_logprob", "q_j2_dim_enrich",
+    "q_snapshot_diff", "q_winsorized", "q_yoy_revenue")
+
+  test("small sorts: no lazy-core query plans a range exchange, but for the frozen join sorts") {
+    val ranged = LazyCore.keySet.filter(planOf(_).contains(RangeExchange))
+    assert(ranged == RangeSorted, s"range exchanges in ${ranged.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("small sorts: a top-k keeps TakeOrderedAndProject and adds no exchange") {
+    def exchanges(p: String) = "Exchange ".r.findAllIn(p).size
+    Seq("q_t1_top5_influence", "q_t2_top5_active").foreach { name =>
+      val (on, off) = (planOf(name), withConfs(ruleOff)(planOf(name)))
+      assert(on.contains("TakeOrderedAndProject") && !on.contains("Coalesce"), on)
+      assert(exchanges(on) == exchanges(off), s"$on\nvs rule off:\n$off")
+    }
+  }
+
+  test("small sorts: a range exchange above the advisory size, without AQE or without coalescing") {
+    val name = "q_a3_histogram"
+    assert(!planOf(name).contains(RangeExchange))
+    assert(withConfs(ruleOff)(planOf(name)).contains(RangeExchange))
+    Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1",
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false").foreach { kv =>
+      assert(withConfs(Seq(kv))(planOf(name)).contains(RangeExchange), kv)
+    }
+  }
+
+  test("small sorts: the same row sequence with the rule on and off, in fewer jobs") {
+    def run(name: String) = {
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val jobs = jobsOf { rows = SparkEntry.queries(name)(spark, sfDir).collect() }
+      (rows, jobs)
+    }
+    Seq("q_a9_engagement_series", "q_a3_histogram", "q_p6_filter_eq").foreach { name =>
+      run(name) // resolves the tables, so neither side counts that job
+      val ((on, jobsOn), (off, jobsOff)) = (run(name), withConfs(ruleOff)(run(name)))
+      assert(on.nonEmpty && on.sameElements(off), name)
+      assert(jobsOn.size < jobsOff.size, s"$name: jobs $jobsOn vs rule off $jobsOff")
+    }
+  }
+
   /** FULL-REGISTRY SHUFFLE RATCHET — the BNLJ-freeze pattern applied to
     * exchange counts: every registered query's shuffle count (Exchange
     * hash/range/single) is pinned in `src/test/resources/
     * shuffles_pinned.tsv`; a refactor that adds an exchange to ANY query
     * fails the build, not the bench. Counts come from the physical plan
-    * at sf0.001 under THIS suite's session (4 shuffle partitions, no
-    * AQE — the PlanAudit configuration), so they are deterministic.
+    * at sf0.001 under THIS suite's session (4 shuffle partitions, AQE
+    * on, the graft extensions, so `SmallSortOnePartition` has shaped the
+    * sorts); the initial adaptive plan is planned before any stage runs,
+    * so the counts are deterministic.
     * Construction of the eager families (LSH/ANN/k-means/tokenizers)
     * runs their bounded sf0.001 build jobs once (StateCache-memoized
     * across JVMs) — measured ~1 min cold for the whole registry.
@@ -101,7 +156,6 @@ class PlanDisciplineSpec extends AnyFunSuite {
     * `SPARK_GRAFT_PIN_REGEN=1 sbt "testOnly graft.PlanDisciplineSpec"`
     * and review the diff; that review IS the ratchet. */
   test("full registry: shuffle counts pinned per query") {
-    graft.plans.GraftFunctions.register(spark)
     val pinPath = java.nio.file.Paths.get("src/test/resources/shuffles_pinned.tsv")
     val shufflePat = "Exchange hashpartitioning|Exchange rangepartitioning|Exchange SinglePartition".r
     val current: Seq[(String, String)] = SparkEntry.queries.keys.toSeq.sorted.map { name =>

@@ -117,7 +117,6 @@ class QualityClassifierSpec extends AnyFunSuite {
   }
 
   test("char_gram_buckets ≡ the relational md5-bucket form") {
-    graft.plans.GraftFunctions.register(spark)
     val texts = Seq("hello world", "aaa", "ab", "", "ünïcødé grams héré",
       // non-BMP: 😀 is TWO UTF-16 units but ONE codepoint — the gram
       // walk must agree with substring()/length() codepoint semantics

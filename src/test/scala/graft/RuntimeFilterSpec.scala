@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestSession.withConfs
 
 /** Runtime bloom-filter join pruning — the engine mechanism that makes the
   * library's shuffle-join shapes cheap at 100 TB without any code change:
@@ -23,16 +24,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-
-  private def withConfs[A](kvs: Seq[(String, String)])(f: => A): A = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   private def query() = {
     val d = "/root/testdata/sf0.01"

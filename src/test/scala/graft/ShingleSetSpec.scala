@@ -38,7 +38,6 @@ class ShingleSetSpec extends AnyFunSuite {
     val sampled = Gen.listOfN(300, textGen)
       .pureApply(Gen.Parameters.default, Seed(42L))
     val cases = fixed ++ sampled
-    graft.plans.GraftFunctions.register(spark)
     val df = cases.toDF("text")
     for (n <- Seq(1, 2, 5)) {
       val got = df.select(

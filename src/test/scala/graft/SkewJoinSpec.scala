@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestSession.withConfs
 
 /** AQE skew-join splitting — the RUNTIME half of the skew story. The
   * library's salted twins (`q_j1_linkage_salted`, `saltedBandSelfJoin`)
@@ -30,16 +31,6 @@ class SkewJoinSpec extends AnyFunSuite {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1KB",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-
-  private def withConfs[A](kvs: Seq[(String, String)])(f: => A): A = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   // 50k rows on ONE key plus a uniform tail, joined to a small dim with
   // payload — the classic hot-key fact-dim join

@@ -1017,6 +1017,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(Streaming.trendingMarker(spark, dir) == ((1L, 11L)))
   }
 
+  test("trending sink: the batch total rides the merge job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_trend_jobs").toString + "/state"
+    val sink = Streaming.trendingSink("item", 2, dir) _
+    sink(Seq("a", "a", "b").toDF("item"), 0L)
+    val jobs = SparkTestSession.jobsOf(sink(Seq("a", "c", "c", "d").toDF("item"), 1L))
+    assert(Streaming.trendingMarker(spark, dir) == ((1L, 7L)))
+    // two AQE shuffle stages and the checkpoint of the merge, the top-k
+    // pull and the state write: no job of its own for the batch total
+    assert(jobs.size == 5 && jobs.count(_.startsWith("collect at ")) == 1, jobs)
+  }
+
   test("incremental rollup sink: crash-window recovery keeps exactly-once merges") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rollup_crash").toString + "/state"
     val fs = new org.apache.hadoop.fs.Path(dir)

@@ -402,7 +402,6 @@ class TextAnalysisSpec extends AnyFunSuite {
       .agg(sum(least($"cc", $"rc")).as("clipped"),
         sum($"cc").as("ct"), sum($"rc").as("rt"))
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    graft.plans.GraftFunctions.register(spark)
     val got = pairs.select($"pair_id",
         call_function("rouge_clip", $"cand", $"ref", lit(2)).as("m"))
       .select($"pair_id", $"m.clipped", $"m.cand_total", $"m.ref_total")
